@@ -1,4 +1,4 @@
-"""Per-page extraction kernel: the full LATYAS operator DAG.
+"""Page extraction kernel: the full LATYAS operator DAG, segmented.
 
 Reproduces the eight-stage physical plan of the reference's
 ``BasePipeline.analyze_pdf`` (latyas/pipelines/base_pipeline.py:94-192)
@@ -15,18 +15,32 @@ span-derived equivalent:
   GOT-OCR2 table OCR     -> the table span's own native text
   TexMix mixed OCR       -> texmix.compose_text_with_equations
 
-Stages (reference cites):
-  1. confidence filter > 0.3 (ultralytics_layout_model.py:81)
-  2. label -> kind, ordered substring match (block.py:29-68)
-  3. overlap merge, strategy "merge" (layout.py:86-132 via :112)
-  4. equation OCR (:114-125)
-  5. embedded-equation containment, margin 20 (:127-152)
-  6. table OCR (:154-167)
-  7. text OCR for text-kind blocks without equations (:169-186)
-  8. xy-cut reflow margin=10 horizontal-first (:189-190)
+Stages (reference cites) and how ``extract_segments`` runs them over a
+batch of pages addressed by page-start offsets:
+  0. Rectangle constructor clamp x2 <- x1 if x1 >= x2, same for y
+     (shape.py:74-77) — vectorized over every row
+  1. confidence filter > 0.3 (ultralytics_layout_model.py:81) —
+     vectorized over the batch
+  2. label -> kind, ordered substring match (block.py:29-68) — parsed
+     once per distinct label, a null label raises
+  3. overlap merge, strategy "merge" (layout.py:86-132 via :112) — a
+     vectorized trigger test over all within-page upper-triangle pairs
+     picks the pages where the order-dependent sweep can change
+     anything (~30% on the fixture corpus); only those run the sweep
+  4. equation OCR (:114-125) — vectorized
+  5. embedded-equation containment, margin 20 (:127-152) — vectorized
+     over within-page (text block, embedeq block) pairs; texmix
+     composition per has-equation block
+  6. table OCR (:154-167) — vectorized
+  7. text OCR for text-kind blocks without equations (:169-186) — one
+     gather over every within-page (plain block, text-layer row) pair
+  8. xy-cut reflow margin=10 horizontal-first (:189-190) — per page
+     with at least two blocks
   9. emission filters (latyas/tools/pdf2text.py:30-39): skip blocks
      with no text, skip EmbedEq, ``$$``-wrap Equation; optional CJK
-     cross-reference filters (pdf2txt.py:86-89)
+     cross-reference filters (pdf2txt.py:86-89) — column arrays built
+     once per batch
+``extract_page`` is the same function over one page.
 
 Extension beyond the reference's text-only sink (north rule:
 interleaved text + media): image-kind blocks are emitted as media spans
@@ -36,12 +50,13 @@ interleaved text + media): image-kind blocks are emitted as media spans
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import List, Optional, Sequence, Tuple
+from typing import List, NamedTuple, Optional, Sequence, Tuple
 
 import numpy as np
+import pandas as pd
 
 from . import blocktypes as bt
-from .overlap import overlap_merge
+from .overlap import MERGE_STRATEGIES, overlap_merge
 from .texmix import compose_text_with_equations
 from .xycut import xy_cut_order
 
@@ -116,6 +131,16 @@ def gather_text(
     return "".join(layer_texts[i].replace("\n", "") for i in hits)
 
 
+def _ranges(lo: np.ndarray, hi: np.ndarray) -> Tuple[np.ndarray, np.ndarray]:
+    """Flatten the index ranges ``[lo[i], hi[i])`` into ``(owner,
+    index)`` pairs, owner-major and ascending within an owner: the
+    within-page pair generator every segmented stage uses."""
+    cnt = np.maximum(hi - lo, 0)
+    owner = np.repeat(np.arange(len(cnt)), cnt)
+    shift = np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
+    return owner, np.arange(len(owner)) + shift
+
+
 def gather_text_batch(
     qx1: np.ndarray,
     qy1: np.ndarray,
@@ -125,35 +150,349 @@ def gather_text_batch(
     layer_areas: np.ndarray,
     layer_texts: Sequence[str],
     ratio: float,
-) -> List[str]:
-    """Vectorized ``gather_text`` for B query rects at once: one
-    (B x L) intersection matrix instead of B separate numpy dispatch
-    chains.  Bit-identical to calling gather_text per rect (same clamp,
-    zero-area guard, layer-order join)."""
+    q_lo: Optional[np.ndarray] = None,
+    q_hi: Optional[np.ndarray] = None,
+) -> np.ndarray:
+    """Vectorized ``gather_text`` for B query rects at once.
+
+    Query b is tested against text-layer rows ``[q_lo[b], q_hi[b])``
+    (default: the whole layer); over a page-sorted layer that is the
+    query's own page, so one call gathers a whole partition from its
+    within-page (query, layer) pairs.  Bit-identical to calling
+    gather_text per rect (same clamp, zero-area guard, layer-order
+    join).  Returns an object array of B strings."""
     B = len(qx1)
-    if B == 0:
-        return []
-    if len(layer_texts) == 0:
-        return [""] * B
+    out = np.full(B, "", dtype=object)
+    if B == 0 or len(layer_texts) == 0:
+        return out
+    if q_lo is None:
+        q_lo = np.zeros(B, dtype=np.int64)
+        q_hi = np.full(B, len(layer_texts), dtype=np.int64)
     qx1 = np.asarray(qx1, dtype=np.float64)
     qy1 = np.asarray(qy1, dtype=np.float64)
     qx2 = np.where(qx1 >= qx2, qx1, qx2)  # shape.py:74-77 clamp
     qy2 = np.where(qy1 >= qy2, qy1, qy2)
     rect_area = (qx2 - qx1) * (qy2 - qy1)
-    iw = np.minimum(layer_rects[None, :, 2], qx2[:, None]) - np.maximum(
-        layer_rects[None, :, 0], qx1[:, None]
-    )
-    ih = np.minimum(layer_rects[None, :, 3], qy2[:, None]) - np.maximum(
-        layer_rects[None, :, 1], qy1[:, None]
-    )
+    q, l = _ranges(q_lo, q_hi)
+    iw = np.minimum(layer_rects[l, 2], qx2[q]) - np.maximum(layer_rects[l, 0], qx1[q])
+    ih = np.minimum(layer_rects[l, 3], qy2[q]) - np.maximum(layer_rects[l, 1], qy1[q])
     inter = np.where(iw > 0, iw, 0.0) * np.where(ih > 0, ih, 0.0)
-    denom = np.minimum(layer_areas[None, :], rect_area[:, None])
+    denom = np.minimum(layer_areas[l], rect_area[q])
     hits = (inter > ratio * denom) & (denom > 0)
-    out = []
-    for b in range(B):
-        idx = np.nonzero(hits[b])[0]
-        out.append("".join(layer_texts[i].replace("\n", "") for i in idx))
+    q, l = q[hits], l[hits]
+    if len(q):
+        # pairs are query-major, layer-ascending: each query's hits are
+        # one run, joined in text-layer (offset) order
+        first = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+        clean = np.array([layer_texts[i].replace("\n", "") for i in l], dtype=object)
+        out[q[first]] = np.add.reduceat(clean, first)
     return out
+
+
+# Pages with more detection candidates than this skip the vectorized
+# merge pre-test and go straight to the sweep: the test's pair count
+# grows as n^2, and the sweep dominates such a page's cost anyway.
+_PAIR_TEST_MAX = 64
+
+
+def _pages_to_sweep(
+    x1: np.ndarray,
+    y1: np.ndarray,
+    x2: np.ndarray,
+    y2: np.ndarray,
+    kinds: np.ndarray,
+    bounds: np.ndarray,
+    threshold: float,
+) -> np.ndarray:
+    """Per page: can the J1 overlap sweep change anything?
+
+    The sweep mutates only when a pair triggers, so if no pair of the
+    ORIGINAL blocks triggers it never mutates and returns the page
+    unchanged.  The test is the sweep's own trigger (kind compatibility,
+    clamped intersection > threshold x either area) in the same float64
+    arithmetic, over every within-page upper-triangle pair at once.
+    NaN coordinates go to the sweep unconditionally: Python's min/max
+    and NumPy's disagree on NaN, and the sweep's answer is the one the
+    per-page kernel always gave."""
+    size = np.diff(bounds)
+    seg = np.repeat(np.arange(len(size)), size)
+    sweep = size > _PAIR_TEST_MAX
+    sweep[seg[np.isnan(x1) | np.isnan(y1) | np.isnan(x2) | np.isnan(y2)]] = True
+    rows = np.flatnonzero(~sweep[seg] & (size[seg] >= 2))
+    i, j = _ranges(rows + 1, bounds[seg[rows] + 1])
+    i = rows[i]
+    tmask = bt.TEXT_KIND_LOOKUP[kinds]
+    same = (kinds[i] == kinds[j]) | (tmask[i] & tmask[j])
+    i, j = i[same], j[same]
+    iw = np.minimum(x2[i], x2[j]) - np.maximum(x1[i], x1[j])
+    ih = np.minimum(y2[i], y2[j]) - np.maximum(y1[i], y1[j])
+    inter = np.where(iw > 0, iw, 0.0) * np.where(ih > 0, ih, 0.0)
+    area = (x2 - x1) * (y2 - y1)
+    hit = (inter > threshold * area[i]) | (inter > threshold * area[j])
+    sweep[seg[i[hit]]] = True
+    return sweep
+
+
+_KIND_NAME_ARR = np.array(
+    [bt.KIND_NAMES[k] for k in range(len(bt.KIND_NAMES))], dtype=object
+)
+
+
+class SegmentSpans(NamedTuple):
+    """Emitted spans of a segmented call, page-major and in reading
+    order within a page: ``page`` is the page-segment index of each
+    span, the other fields its (kind, text, media_ref) columns."""
+
+    page: np.ndarray
+    kind: np.ndarray
+    text: np.ndarray
+    media_ref: np.ndarray
+
+
+def extract_segments(
+    x1: np.ndarray,
+    y1: np.ndarray,
+    x2: np.ndarray,
+    y2: np.ndarray,
+    conf: np.ndarray,
+    labels: Sequence[str],
+    texts: Sequence[Optional[str]],
+    media_refs: Sequence[Optional[str]],
+    starts: Sequence[int],
+    cfg: ExtractConfig = DEFAULT_CONFIG,
+    det: Optional[np.ndarray] = None,
+    offsets: Optional[np.ndarray] = None,
+) -> SegmentSpans:
+    """Run the full page DAG over many pages at once.
+
+    Rows are page-contiguous; page ``s`` is rows ``[starts[s],
+    starts[s+1])`` (the last page ends at the last row), each page in
+    span-offset order.  Every stage that does not depend on a page's
+    sweep order runs once over the whole batch, on within-page pairs
+    generated from the page offsets; only the J1 sweep (on pages where
+    some pair can trigger it), texmix composition (per has-equation
+    block) and xy-cut (per page with >= 2 blocks) stay per page.
+
+    Row semantics as in ``extract_page``: each row is both a detection
+    candidate and a text-layer rect; ``det`` restricts the text layer
+    to detector 0; ``offsets`` keys the texmix equation-line exclusion
+    (the row index when absent).
+    """
+    x1 = np.asarray(x1, dtype=np.float64)
+    y1 = np.asarray(y1, dtype=np.float64)
+    # Rectangle constructor clamp (shape.py:74-77): every row is a
+    # Rectangle in the reference, detection and text layer alike
+    x2 = np.where(x1 >= x2, x1, np.asarray(x2, dtype=np.float64))
+    y2 = np.where(y1 >= y2, y1, np.asarray(y2, dtype=np.float64))
+    conf = np.asarray(conf, dtype=np.float64)
+    labels = np.asarray(labels, dtype=object)
+    texts = np.asarray(texts, dtype=object)
+    media_refs = np.asarray(media_refs, dtype=object)
+    if cfg.merge_strategy not in MERGE_STRATEGIES:
+        raise ValueError(f"unsupported overlapping strategy: {cfg.merge_strategy}")
+    n = len(x1)
+    if n == 0:
+        empty = np.empty(0, dtype=object)
+        return SegmentSpans(np.empty(0, dtype=np.int64), empty, empty, empty)
+    bounds = np.append(np.asarray(starts, dtype=np.int64), n)
+    S = len(bounds) - 1
+    row_page = np.repeat(np.arange(S), np.diff(bounds))
+    pages = np.arange(S + 1)
+    key = np.arange(n) if offsets is None else np.asarray(offsets)
+
+    # text layer: every row with native text, regardless of confidence
+    in_layer = texts != None  # noqa: E711 (elementwise on object arrays)
+    if det is not None:
+        in_layer &= np.asarray(det) == 0
+    layer_idx = np.flatnonzero(in_layer)
+    layer_rects = np.stack(
+        [x1[layer_idx], y1[layer_idx], x2[layer_idx], y2[layer_idx]], axis=1
+    )
+    layer_areas = (layer_rects[:, 2] - layer_rects[:, 0]) * (
+        layer_rects[:, 3] - layer_rects[:, 1]
+    )
+    layer_texts = texts[layer_idx]
+    layer_bounds = np.searchsorted(row_page[layer_idx], pages)
+
+    # stage 1-2: confidence filter + label classification, the ordered
+    # substring parse run once per distinct label
+    cand = np.flatnonzero(conf > cfg.conf_threshold)
+    codes, uniq = pd.factorize(labels[cand])
+    if (codes < 0).any():
+        # a null label has no kind; fail as the label parser always has
+        # rather than let code -1 pick another label's kind
+        raise AttributeError(
+            f"null label on detection row {int(cand[np.argmax(codes < 0)])}"
+        )
+    kinds = bt.kinds_from_labels(uniq)[codes]
+
+    # stage 3: overlap merge, swept only on pages where a pair triggers
+    cx1, cy1, cx2, cy2 = x1[cand], y1[cand], x2[cand], y2[cand]
+    cand_bounds = np.searchsorted(row_page[cand], pages)
+    sweep = np.flatnonzero(_pages_to_sweep(
+        cx1, cy1, cx2, cy2, kinds, cand_bounds, cfg.area_threshold
+    ))
+    bx1, by1, bx2, by2, bk = cx1, cy1, cx2, cy2, kinds
+    if len(sweep):
+        keep = np.ones(len(cand), dtype=bool)
+        bx1, by1, bx2, by2, bk = (a.copy() for a in (cx1, cy1, cx2, cy2, kinds))
+        for p in sweep:
+            a, b = cand_bounds[p], cand_bounds[p + 1]
+            k, mx1, my1, mx2, my2, mk = overlap_merge(
+                cx1[a:b], cy1[a:b], cx2[a:b], cy2[a:b],
+                kinds[a:b], bt.TEXT_KIND_LOOKUP,
+                area_threshold=cfg.area_threshold,
+                strategy=cfg.merge_strategy,
+            )
+            keep[a:b] = False
+            k = k + a
+            keep[k] = True
+            bx1[k], by1[k], bx2[k], by2[k], bk[k] = mx1, my1, mx2, my2, mk
+        cand = cand[keep]
+        bx1, by1, bx2, by2, bk = bx1[keep], by1[keep], bx2[keep], by2[keep], bk[keep]
+    src = cand  # surviving block -> original row (payload carrier)
+    m = len(src)
+    bpage = row_page[src]
+    block_bounds = np.searchsorted(bpage, pages)
+    block_text = np.full(m, None, dtype=object)
+    has_eq = np.zeros(m, dtype=bool)
+
+    # stage 4: equation OCR (own span text); rule-gated per preset
+    # (base_pipeline.py:120-125 — reference raises without a rule)
+    if _kind_ruled(cfg, bt.EQUATION):
+        eq = bk == bt.EQUATION
+        block_text[eq] = texts[src[eq]]
+
+    # stage 5: embedded-equation containment over within-page
+    # (text block, embedeq block) pairs -> texmix compose per block
+    text_mask = bt.text_kind_mask(bk)
+    embed = np.flatnonzero(bk == bt.EMBED_EQ)
+    if len(embed):
+        eb = np.searchsorted(bpage[embed], pages)
+        tb = np.flatnonzero(text_mask)
+        t, e = _ranges(eb[bpage[tb]], eb[bpage[tb] + 1])
+        t, e = tb[t], embed[e]
+        mg = cfg.containment_margin
+        inside = (
+            (bx1[e] >= bx1[t] - mg)
+            & (by1[e] >= by1[t] - mg)
+            & (bx2[e] <= bx2[t] + mg)
+            & (by2[e] <= by2[t] + mg)
+        )
+        t, e = t[inside], e[inside]
+        has_eq[t] = True
+        # rule gate: TextWithEquation route (base_pipeline.py:146-151);
+        # _has_equation is still set first, exactly as the reference
+        # does before its rule lookup, so stage 7 skips the block
+        if len(t) and _kind_ruled(cfg, bt.TEXT_WITH_EQUATION):
+            first = np.flatnonzero(np.r_[True, t[1:] != t[:-1]])
+            for b, eqs in zip(t[first], np.split(e, first[1:])):
+                la, lb = layer_bounds[bpage[b]], layer_bounds[bpage[b] + 1]
+                block_text[b] = _texmix_block(
+                    b, eqs, bx1, by1, bx2, by2, texts[src[eqs]], key[src[eqs]],
+                    layer_rects[la:lb], layer_areas[la:lb], layer_texts[la:lb],
+                    key[layer_idx[la:lb]], cfg.gather_ratio,
+                )
+
+    # stage 6: table OCR (own span text); rule-gated per preset
+    if _kind_ruled(cfg, bt.TABLE):
+        tab = bk == bt.TABLE
+        block_text[tab] = texts[src[tab]]
+
+    # stage 7: text OCR via gather — every plain text block of the
+    # batch against its own page's text layer in one call; rule gate is
+    # PER KIND (base_pipeline.py:180-184 looks up block.kind: report/
+    # book rule only title/text/caption, so header/footer/reference
+    # stay textless)
+    ruled = text_mask & ~has_eq
+    if cfg.ruled_kinds is not None:
+        ruled &= np.isin(bk, list(cfg.ruled_kinds))
+    plain = np.flatnonzero(ruled)
+    gathered = gather_text_batch(
+        bx1[plain], by1[plain], bx2[plain], by2[plain],
+        layer_rects, layer_areas, layer_texts, cfg.gather_ratio,
+        q_lo=layer_bounds[bpage[plain]], q_hi=layer_bounds[bpage[plain] + 1],
+    )
+    if cfg.cjk_filters:
+        # pdf2txt.py:86-89: drop CJK cross-reference snippets
+        kept = np.array([
+            not (t.startswith("图") or t.startswith("表")
+                 or (len(t) < 256 and ("见表" in t or "见图" in t)))
+            for t in gathered
+        ], dtype=bool)
+        plain, gathered = plain[kept], gathered[kept]
+    block_text[plain] = gathered
+
+    # stage 8: xy-cut reflow, per page with at least two blocks; plain
+    # lists, since xy_cut_order converts its inputs to lists anyway
+    order = np.arange(m)
+    lx1, ly1, lx2, ly2 = bx1.tolist(), by1.tolist(), bx2.tolist(), by2.tolist()
+    for p in np.flatnonzero(np.diff(block_bounds) >= 2):
+        a, b = block_bounds[p], block_bounds[p + 1]
+        order[a:b] = a + xy_cut_order(
+            lx1[a:b], ly1[a:b], lx2[a:b], ly2[a:b], margin=cfg.xy_margin,
+            horizontal_first=True, max_depth=cfg.max_depth,
+        )
+
+    # stage 9: emission as column arrays: media spans for image kinds,
+    # else blocks with text except EmbedEq, Equation $$-wrapped
+    image = bt.image_kind_mask(bk)
+    emit = np.where(
+        image, cfg.keep_media, (block_text != None) & (bk != bt.EMBED_EQ)  # noqa: E711
+    )
+    eq = emit & (bk == bt.EQUATION)
+    block_text[eq] = "\n$$\n" + block_text[eq] + "\n$$\n"
+    media = np.full(m, None, dtype=object)
+    media[image] = media_refs[src[image]]
+    order = order[emit[order]]
+    return SegmentSpans(
+        bpage[order], _KIND_NAME_ARR[bk[order]], block_text[order], media[order]
+    )
+
+
+def _texmix_block(
+    b: int,
+    eqs: np.ndarray,
+    bx1: np.ndarray,
+    by1: np.ndarray,
+    bx2: np.ndarray,
+    by2: np.ndarray,
+    eq_native: np.ndarray,
+    eq_keys: np.ndarray,
+    layer_rects: np.ndarray,
+    layer_areas: np.ndarray,
+    layer_texts: np.ndarray,
+    layer_keys: np.ndarray,
+    ratio: float,
+) -> str:
+    """Texmix composition of block ``b`` with its contained equation
+    blocks ``eqs`` (layout order), over its page's text layer."""
+    eq_rects = [(bx1[e], by1[e], bx2[e], by2[e]) for e in eqs]
+    eq_texts = [t or "" for t in eq_native]
+    eq_rows = {int(k) for k in eq_keys}
+    # mask analog: text lines overlapping the block, equations excluded
+    block_rect = (bx1[b], by1[b], bx2[b], by2[b])
+    line_rects = []
+    if len(layer_texts):
+        iw = np.minimum(layer_rects[:, 2], block_rect[2]) - np.maximum(
+            layer_rects[:, 0], block_rect[0]
+        )
+        ih = np.minimum(layer_rects[:, 3], block_rect[3]) - np.maximum(
+            layer_rects[:, 1], block_rect[1]
+        )
+        inter = np.where(iw > 0, iw, 0.0) * np.where(ih > 0, ih, 0.0)
+        block_area = (block_rect[2] - block_rect[0]) * (block_rect[3] - block_rect[1])
+        denom = np.minimum(layer_areas, block_area)
+        # inter <= denom, so inter > ratio*denom implies denom > 0
+        for k in np.nonzero(inter > ratio * denom)[0]:
+            if int(layer_keys[k]) in eq_rows:
+                continue
+            line_rects.append(tuple(layer_rects[k]))
+
+    def recognize(rect: Tuple[float, float, float, float]) -> str:
+        return gather_text(rect, layer_rects, layer_areas, layer_texts, ratio)
+
+    return compose_text_with_equations(eq_rects, eq_texts, line_rects, recognize)
 
 
 def extract_page(
@@ -169,7 +508,8 @@ def extract_page(
     det: Optional[np.ndarray] = None,
     offsets: Optional[np.ndarray] = None,
 ) -> List[Span]:
-    """Run the full page DAG; rows must be in span-offset order.
+    """Run the full page DAG over one page; rows must be in span-offset
+    order.  This is ``extract_segments`` over a single page.
 
     Each input row is both a detection candidate (bbox, conf, label)
     and a text-layer rect (bbox, native text).  Returns the emitted
@@ -188,166 +528,11 @@ def extract_page(
     it the row index is the key — identical semantics single-detector,
     but multi-detector rows sharing an offset must exclude by offset.
     """
-    x1 = np.asarray(x1, dtype=np.float64)
-    y1 = np.asarray(y1, dtype=np.float64)
-    x2 = np.asarray(x2, dtype=np.float64)
-    y2 = np.asarray(y2, dtype=np.float64)
-    conf = np.asarray(conf, dtype=np.float64)
-    n = len(x1)
-
-    # text layer: every row with native text, regardless of confidence
-    layer_idx = [
-        i for i in range(n)
-        if texts[i] is not None and (det is None or det[i] == 0)
-    ]
-    layer_rects = np.stack(
-        [x1[layer_idx], y1[layer_idx], x2[layer_idx], y2[layer_idx]], axis=1
-    ) if layer_idx else np.empty((0, 4))
-    layer_areas = (
-        (layer_rects[:, 2] - layer_rects[:, 0]) * (layer_rects[:, 3] - layer_rects[:, 1])
-        if layer_idx
-        else np.empty(0)
+    spans = extract_segments(
+        x1, y1, x2, y2, conf, labels, texts, media_refs, [0], cfg,
+        det=det, offsets=offsets,
     )
-    layer_texts = [texts[i] for i in layer_idx]
-
-    def recognize(rect: Tuple[float, float, float, float]) -> str:
-        return gather_text(rect, layer_rects, layer_areas, layer_texts, cfg.gather_ratio)
-
-    # stage 1-2: confidence filter + label classification
-    det = np.nonzero(conf > cfg.conf_threshold)[0]
-    kinds = bt.kinds_from_labels([labels[i] for i in det])
-
-    # stage 3: overlap merge
-    keep, bx1, by1, bx2, by2, bkinds = overlap_merge(
-        x1[det], y1[det], x2[det], y2[det],
-        kinds, bt.TEXT_KIND_LOOKUP,
-        area_threshold=cfg.area_threshold,
-        strategy=cfg.merge_strategy,
-    )
-    src = det[keep]  # surviving block -> original row (payload carrier)
-    m = len(src)
-    block_text: List[Optional[str]] = [None] * m
-    has_eq = np.zeros(m, dtype=bool)
-
-    # stage 4: equation OCR (own span text); rule-gated per preset
-    # (base_pipeline.py:120-125 — reference raises without a rule)
-    if _kind_ruled(cfg, bt.EQUATION):
-        for b in range(m):
-            if bkinds[b] == bt.EQUATION:
-                block_text[b] = texts[src[b]]
-
-    # stage 5: embedded-equation containment -> texmix compose
-    text_mask = bt.text_kind_mask(bkinds)
-    eq_member_offsets = set()
-    eq_blocks = [b for b in range(m) if bkinds[b] == bt.EMBED_EQ]
-    contained: List[List[int]] = [[] for _ in range(m)]
-    for b in range(m):
-        if not text_mask[b]:
-            continue
-        for e in eq_blocks:
-            if e == b:
-                continue
-            if (
-                bx1[e] >= bx1[b] - cfg.containment_margin
-                and by1[e] >= by1[b] - cfg.containment_margin
-                and bx2[e] <= bx2[b] + cfg.containment_margin
-                and by2[e] <= by2[b] + cfg.containment_margin
-            ):
-                contained[b].append(e)
-    for b in range(m):
-        if not contained[b]:
-            continue
-        has_eq[b] = True
-        # rule gate: TextWithEquation route (base_pipeline.py:146-151);
-        # _has_equation is still set first, exactly as the reference
-        # does before its rule lookup, so stage 7 skips the block
-        if not _kind_ruled(cfg, bt.TEXT_WITH_EQUATION):
-            continue
-        eqs = contained[b]
-        eq_rects = [(bx1[e], by1[e], bx2[e], by2[e]) for e in eqs]
-        eq_texts = [texts[src[e]] or "" for e in eqs]
-        if offsets is None:
-            eq_rows = {int(src[e]) for e in eqs}
-        else:
-            eq_rows = {int(offsets[src[e]]) for e in eqs}
-        # mask analog: text lines overlapping the block, equations excluded
-        block_rect = (bx1[b], by1[b], bx2[b], by2[b])
-        line_rects = []
-        if len(layer_texts):
-            iw = np.minimum(layer_rects[:, 2], block_rect[2]) - np.maximum(
-                layer_rects[:, 0], block_rect[0]
-            )
-            ih = np.minimum(layer_rects[:, 3], block_rect[3]) - np.maximum(
-                layer_rects[:, 1], block_rect[1]
-            )
-            inter = np.where(iw > 0, iw, 0.0) * np.where(ih > 0, ih, 0.0)
-            block_area = (block_rect[2] - block_rect[0]) * (block_rect[3] - block_rect[1])
-            denom = np.minimum(layer_areas, block_area)
-            # inter <= denom, so inter > ratio*denom implies denom > 0
-            for k in np.nonzero(inter > cfg.gather_ratio * denom)[0]:
-                key = (
-                    layer_idx[k] if offsets is None
-                    else int(offsets[layer_idx[k]])
-                )
-                if key in eq_rows:
-                    continue
-                line_rects.append(tuple(layer_rects[k]))
-        block_text[b] = compose_text_with_equations(
-            eq_rects, eq_texts, line_rects, recognize
-        )
-
-    # stage 6: table OCR (own span text); rule-gated per preset
-    if _kind_ruled(cfg, bt.TABLE):
-        for b in range(m):
-            if bkinds[b] == bt.TABLE:
-                block_text[b] = texts[src[b]]
-
-    # stage 7: text OCR via gather — all plain text blocks of the page
-    # in one vectorized intersection matrix; rule gate is PER KIND
-    # (base_pipeline.py:180-184 looks up block.kind: report/book rule
-    # only title/text/caption, so header/footer/reference stay textless)
-    plain = [
-        b for b in range(m)
-        if text_mask[b] and not has_eq[b] and _kind_ruled(cfg, int(bkinds[b]))
-    ]
-    gathered = gather_text_batch(
-        bx1[plain], by1[plain], bx2[plain], by2[plain],
-        layer_rects, layer_areas, layer_texts, cfg.gather_ratio,
-    )
-    for b, text in zip(plain, gathered):
-        if cfg.cjk_filters:
-            # pdf2txt.py:86-89: drop CJK cross-reference snippets
-            if text.startswith("图") or text.startswith("表"):
-                continue
-            if len(text) < 256 and ("见表" in text or "见图" in text):
-                continue
-        block_text[b] = text
-
-    # stage 8: xy-cut reflow
-    order = xy_cut_order(
-        bx1, by1, bx2, by2, margin=cfg.xy_margin, horizontal_first=True,
-        max_depth=cfg.max_depth,
-    )
-
-    # stage 9: emission
-    out: List[Span] = []
-    for b in order:
-        kind = int(bkinds[b])
-        name = bt.KIND_NAMES[kind]
-        if kind in bt.IMAGE_KINDS:
-            if cfg.keep_media:
-                out.append((name, None, media_refs[src[b]]))
-            continue
-        text = block_text[b]
-        if text is None:
-            continue
-        if kind == bt.EMBED_EQ:
-            continue
-        if kind == bt.EQUATION:
-            out.append((name, "\n$$\n" + text + "\n$$\n", None))
-        else:
-            out.append((name, text, None))
-    return out
+    return list(zip(spans.kind.tolist(), spans.text.tolist(), spans.media_ref.tolist()))
 
 
 # Kinds the dual-source path arbitrates (pdf2txt.py:68: Text, Title,
@@ -479,31 +664,23 @@ def extract_page_dual(
     return out
 
 
-def extract_page_rows(rows: Sequence[dict], cfg: ExtractConfig = DEFAULT_CONFIG) -> List[Span]:
-    """Convenience wrapper over dict rows (offset order expected)."""
-    return extract_page(
-        np.array([r["x1"] for r in rows]),
-        np.array([r["y1"] for r in rows]),
-        np.array([r["x2"] for r in rows]),
-        np.array([r["y2"] for r in rows]),
-        np.array([r["conf"] for r in rows]),
-        [r["label"] for r in rows],
-        [r["text"] for r in rows],
-        [r["media_ref"] for r in rows],
-        cfg,
-    )
-
-
 def extract_document_rows(
     rows: Sequence[dict], cfg: ExtractConfig = DEFAULT_CONFIG
 ) -> List[Tuple[str, Optional[str], Optional[str], int]]:
-    """Run every page of a doc, assigning a doc-wide reading order."""
-    pages = sorted({r["page"] for r in rows})
-    out: List[Tuple[str, Optional[str], Optional[str], int]] = []
-    pos = 0
-    for p in pages:
-        page_rows = sorted((r for r in rows if r["page"] == p), key=lambda r: r["offset"])
-        for kind, text, media in extract_page_rows(page_rows, cfg):
-            out.append((kind, text, media, pos))
-            pos += 1
-    return out
+    """Run every page of a doc (dict rows, any order) in one segmented
+    call, assigning a doc-wide reading order."""
+    rows = sorted(rows, key=lambda r: (r["page"], r["offset"]))
+    starts = [i for i, r in enumerate(rows) if i == 0 or r["page"] != rows[i - 1]["page"]]
+    col = lambda k: [r[k] for r in rows]  # noqa: E731
+    spans = extract_segments(
+        np.array(col("x1"), dtype=np.float64), np.array(col("y1"), dtype=np.float64),
+        np.array(col("x2"), dtype=np.float64), np.array(col("y2"), dtype=np.float64),
+        np.array(col("conf"), dtype=np.float64), col("label"), col("text"),
+        col("media_ref"), starts, cfg,
+    )
+    return [
+        (kind, text, media, pos)
+        for pos, (kind, text, media) in enumerate(
+            zip(spans.kind.tolist(), spans.text.tolist(), spans.media_ref.tolist())
+        )
+    ]

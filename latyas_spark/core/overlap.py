@@ -25,6 +25,8 @@ from __future__ import annotations
 
 import numpy as np
 
+MERGE_STRATEGIES = ("merge", "keep_large", "keep_small")
+
 
 def overlap_merge(
     x1: np.ndarray,
@@ -42,7 +44,7 @@ def overlap_merge(
     returned are the post-mutation values for the survivors.
     ``text_kind_mask`` is a bool lookup table indexed by kind code.
     """
-    if strategy not in ("merge", "keep_large", "keep_small"):
+    if strategy not in MERGE_STRATEGIES:
         raise ValueError(f"unsupported overlapping strategy: {strategy}")
 
     n = len(kinds)

@@ -403,7 +403,7 @@ def extract_page_oracle(
                 )
             )
 
-    # overlap merge sweep (layout.py:86-132)
+    # overlap sweep (layout.py:86-132), strategy per cfg (:108-126)
     dropped: set = set()
     for i in range(len(blocks)):
         if i in dropped:
@@ -417,6 +417,12 @@ def extract_page_oracle(
                 inter > cfg.area_threshold * a.rect.area
                 or inter > cfg.area_threshold * b.rect.area
             ):
+                continue
+            if cfg.merge_strategy == "keep_large":  # drop the smaller; tie drops a
+                dropped.add(j if a.rect.area > b.rect.area else i)
+                continue
+            if cfg.merge_strategy == "keep_small":  # drop the larger; tie drops a
+                dropped.add(j if a.rect.area < b.rect.area else i)
                 continue
             dropped.add(i)
             if a.kind > b.kind:

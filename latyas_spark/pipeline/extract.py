@@ -10,18 +10,35 @@ Plan shape (SURVEY.md §3 lifecycle mapping):
              its output stays doc_id-clustered)
                                 |
           mapInPandas(whole-partition kernel: pandas lexsort by
-          (doc_id, page, offset), then per-doc page extraction)
+          (doc_id, page, offset), then the segmented page kernel
+          over every page of the partition at once)
                                 |
                        span rows / nested docs out
 
 Scale design (SURVEY.md §4.3):
 
 * **Batched kernels, not per-group calls.**  groupBy().applyInPandas
-  invokes Python once per group; page groups are tiny (tens of rows),
-  so per-group overhead would dominate at any scale.  Instead we
+  invokes Python once per group; page groups are tiny (~10 rows), so
+  per-group overhead would dominate at any scale.  Instead we
   repartition by hash(doc_id) and run ``mapInPandas`` over the whole
-  task partition: one python invocation per partition, per-doc groups
-  split off vectorized with flatnonzero on the sorted doc_id column.
+  task partition: one Python invocation per partition.
+* **Segmented, not per-page, inside the batch.**  Calling the page DAG
+  once per ~10-row page still pays a dozen small NumPy dispatches per
+  page, and that overhead dominated the kernel.  The sorted partition
+  is instead addressed by page-segment offsets (one flatnonzero over
+  the doc_id/page change points) and handed to
+  ``core.document.extract_segments`` in page-aligned windows of
+  ``KERNEL_WINDOW_ROWS`` rows.  Confidence filter, label -> kind (the
+  label parse runs per distinct label), the J1 merge pre-test,
+  containment, text gather and emission each run once per window as
+  vectorized operations on within-page pairs; only the order-dependent
+  sweeps stay per page — the J1 sweep on pages where some pair can
+  trigger it, xy-cut on pages with >= 2 blocks, texmix per
+  has-equation block.  Doc-wide order (doc mode) and page-local
+  position (page mode) are run positions over the page-major span
+  arrays; the two mapInPandas functions differ only in that output
+  shape.  The dual-source kernel shares the driver and calls
+  ``extract_page_dual`` per page.
 * **Keep the JVM out of the hot path.**  Both join inputs are
   repartitioned by doc_id so the join itself needs no exchange
   (requires spark.sql.requireAllClusterKeysForCoPartition=false, set
@@ -35,10 +52,10 @@ Scale design (SURVEY.md §4.3):
   docs are routed by span count: normal docs take the single-shuffle
   doc path (reading order assigned inside the kernel); mega docs are
   re-keyed by (doc_id, page) — the salt — and their doc-wide order is
-  recovered with a window over the (much smaller) span output.  The
-  mega id set is obtained from a map-side-combined count (or free from
-  ``size(spans)`` on the nested input) and is broadcast as an isin
-  filter.
+  recovered with a window over the (much smaller) span output.  Every
+  entry point gets the mega id set from ``route_mega_docs``: a
+  map-side-combined count, collected as an isin list (a broadcast
+  semi/anti join past MAX_MEGA_INLIST ids).
 * **No per-row Python** anywhere; only the columns the kernel needs
   cross the Arrow boundary (pandas UDFs are a pushdown barrier, so
   cheap filters/pruning happen before the shuffle by construction).
@@ -46,7 +63,7 @@ Scale design (SURVEY.md §4.3):
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Sequence
+from typing import Iterator, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -54,11 +71,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..core.document import (
+from ..core.document import (  # noqa: F401 (extract_page is re-exported)
     DEFAULT_CONFIG,
     ExtractConfig,
+    SegmentSpans,
     extract_page,
     extract_page_dual,
+    extract_segments,
 )
 
 # Columns the page kernel consumes.
@@ -131,51 +150,61 @@ def _clean_obj(col: pd.Series) -> np.ndarray:
     return arr
 
 
-def _page_e1(cols: _Cols, ps: int, pe: int, cfg: ExtractConfig):
-    """Flagship (E1, analyze_pdf) page call over one page slice."""
-    return extract_page(
-        cols.x1[ps:pe],
-        cols.y1[ps:pe],
-        cols.x2[ps:pe],
-        cols.y2[ps:pe],
-        cols.conf[ps:pe],
-        cols.label[ps:pe],
-        cols.text[ps:pe],
-        cols.media_ref[ps:pe],
-        cfg,
-        det=None if cols.det is None else cols.det[ps:pe],
-        offsets=cols.offset[ps:pe],
+# Rows per segmented kernel call: the partition is cut into page-aligned
+# windows of about this many rows, which bounds the kernel's within-page
+# pair temporaries independent of the partition size.
+KERNEL_WINDOW_ROWS = 8192
+
+
+def _page_starts(cols: _Cols) -> np.ndarray:
+    """Start row of every (doc_id, page) segment of a sorted chunk."""
+    ids, pages = cols.doc_id, cols.page
+    change = (ids[1:] != ids[:-1]) | (pages[1:] != pages[:-1])
+    return np.concatenate(([0], np.flatnonzero(change) + 1))
+
+
+def _e1_spans(cols: _Cols, starts: np.ndarray, cfg: ExtractConfig) -> SegmentSpans:
+    """Flagship (E1, analyze_pdf) kernel over a whole chunk: one
+    segmented call per page-aligned window of KERNEL_WINDOW_ROWS."""
+    bounds = np.append(starts, cols.n)
+    cuts = np.unique(
+        np.searchsorted(starts, np.arange(0, cols.n, KERNEL_WINDOW_ROWS), "right") - 1
     )
+    parts = []
+    for ws, we in zip(cuts, np.append(cuts[1:], len(starts))):
+        rs, re_ = bounds[ws], bounds[we]
+        spans = extract_segments(
+            cols.x1[rs:re_], cols.y1[rs:re_], cols.x2[rs:re_], cols.y2[rs:re_],
+            cols.conf[rs:re_], cols.label[rs:re_], cols.text[rs:re_],
+            cols.media_ref[rs:re_], starts[ws:we] - rs, cfg,
+            det=None if cols.det is None else cols.det[rs:re_],
+            offsets=cols.offset[rs:re_],
+        )
+        parts.append(spans._replace(page=spans.page + ws))
+    return SegmentSpans(*(np.concatenate(c) for c in zip(*parts)))
 
 
-def _page_dual(cols: _Cols, ps: int, pe: int, cfg: ExtractConfig):
-    """Dual-source (E2, pdf2txt.py) page call over one page slice."""
-    return extract_page_dual(
-        cols.x1[ps:pe],
-        cols.y1[ps:pe],
-        cols.x2[ps:pe],
-        cols.y2[ps:pe],
-        cols.conf[ps:pe],
-        cols.label[ps:pe],
-        cols.ocr_text[ps:pe],
-        cols.lx1[ps:pe],
-        cols.ly1[ps:pe],
-        cols.lx2[ps:pe],
-        cols.ly2[ps:pe],
-        cols.text[ps:pe],
-        cfg,
-    )
+def _dual_spans(cols: _Cols, starts: np.ndarray, cfg: ExtractConfig) -> SegmentSpans:
+    """Dual-source (E2, pdf2txt.py) kernel: extract_page_dual per page."""
+    page, spans = [], []
+    for p, (ps, pe) in enumerate(zip(starts, np.append(starts[1:], cols.n))):
+        out = extract_page_dual(
+            cols.x1[ps:pe], cols.y1[ps:pe], cols.x2[ps:pe], cols.y2[ps:pe],
+            cols.conf[ps:pe], cols.label[ps:pe], cols.ocr_text[ps:pe],
+            cols.lx1[ps:pe], cols.ly1[ps:pe], cols.lx2[ps:pe], cols.ly2[ps:pe],
+            cols.text[ps:pe], cfg,
+        )
+        page += [p] * len(out)
+        spans += out
+    arr = np.array(spans, dtype=object).reshape(-1, 3)
+    return SegmentSpans(np.array(page, dtype=np.int64), arr[:, 0], arr[:, 1], arr[:, 2])
 
 
-def _run_pages(cols: _Cols, s: int, e: int, cfg: ExtractConfig, page_fn=_page_e1):
-    """Run page_fn per page of rows [s:e) of one doc (sorted by
-    (page, ...)); yields (page, spans)."""
-    pages = cols.page[s:e]
-    bounds = np.flatnonzero(pages[1:] != pages[:-1]) + 1 + s
-    starts = np.concatenate(([s], bounds))
-    ends = np.concatenate((bounds, [e]))
-    for ps, pe in zip(starts, ends):
-        yield int(cols.page[ps]), page_fn(cols, ps, pe, cfg)
+def _run_positions(keys: np.ndarray) -> np.ndarray:
+    """0-based position of each element within its run of equal keys."""
+    n = len(keys)
+    first = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+    return np.arange(n) - np.repeat(first, np.diff(np.append(first, n)))
 
 
 def _sorted_partition_chunks(
@@ -202,6 +231,20 @@ def _sorted_partition_chunks(
     only enforces a floor of 4x cores.  Mega docs are page-salted
     before this point, so no partition is dominated by one document —
     the bound holds under document skew.
+
+    The segmented kernel adds within-page pair temporaries (a few
+    int64/float64/bool arrays, ~100 B per pair) on top of the buffered
+    partition.  They are built per window of KERNEL_WINDOW_ROWS rows, so
+    they do not grow with the partition: the merge pre-test makes
+    n(n-1)/2 pairs per page of n detections and skips pages above
+    _PAIR_TEST_MAX (64) detections, so at most 32 pairs per row; the
+    gather makes (plain text blocks x text-layer rows) pairs per page,
+    none on pages without plain text blocks; containment makes
+    (text blocks x embedded equations) pairs.  At the fixture shape
+    (~10 rows per page) that is ~4 merge + ~7 gather pairs per row,
+    ~9 MB per 8192-row window; the bound is 32 + 2n pairs per row for
+    pages of n rows.  A single page of n rows still makes ~n^2 gather
+    pairs, as the per-page B x L intersection matrix always did.
     """
     parts = [pdf for pdf in batches if len(pdf)]
     if not parts:
@@ -213,76 +256,61 @@ def _sorted_partition_chunks(
     yield pdf
 
 
-def _doc_mode_kernel(cfg: ExtractConfig, page_fn=_page_e1,
+def _kernel(cfg: ExtractConfig, dual: bool, sort_cols, frame):
+    """The one kernel driver: sort the partition, run the E1 (or dual)
+    kernel over all its pages, and hand the spans to ``frame`` for the
+    output shape."""
+    spans_of = _dual_spans if dual else _e1_spans
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for chunk in _sorted_partition_chunks(batches, list(sort_cols)):
+            cols = _Cols(chunk)
+            starts = _page_starts(cols)
+            yield frame(cols, starts, spans_of(cols, starts, cfg))
+
+    return run
+
+
+def _doc_frame(cols: _Cols, starts: np.ndarray, spans: SegmentSpans) -> pd.DataFrame:
+    # page segments are doc-contiguous, so a span's doc-wide order is
+    # its position within the run of spans of its doc
+    ids = cols.doc_id[starts]
+    doc_of_page = np.cumsum(np.r_[True, ids[1:] != ids[:-1]])
+    return pd.DataFrame(
+        {
+            "doc_id": pd.Series(ids[spans.page], dtype=object),
+            "order": pd.Series(_run_positions(doc_of_page[spans.page]), dtype="int32"),
+            "kind": pd.Series(spans.kind, dtype=object),
+            "text": pd.Series(spans.text, dtype=object),
+            "media_ref": pd.Series(spans.media_ref, dtype=object),
+        }
+    )
+
+
+def _page_frame(cols: _Cols, starts: np.ndarray, spans: SegmentSpans) -> pd.DataFrame:
+    first = starts[spans.page]
+    return pd.DataFrame(
+        {
+            "doc_id": pd.Series(cols.doc_id[first], dtype=object),
+            "page": pd.Series(cols.page[first], dtype="int32"),
+            "page_pos": pd.Series(_run_positions(spans.page), dtype="int32"),
+            "kind": pd.Series(spans.kind, dtype=object),
+            "text": pd.Series(spans.text, dtype=object),
+            "media_ref": pd.Series(spans.media_ref, dtype=object),
+        }
+    )
+
+
+def _doc_mode_kernel(cfg: ExtractConfig, dual: bool = False,
                      sort_cols=("doc_id", "page", "offset")):
     """mapInPandas fn: whole docs per chunk, doc-wide order in-kernel."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for chunk in _sorted_partition_chunks(batches, list(sort_cols)):
-            cols = _Cols(chunk)
-            out_doc, out_order, out_kind, out_text, out_media = [], [], [], [], []
-            ids = cols.doc_id
-            starts = np.concatenate(
-                ([0], np.flatnonzero(ids[1:] != ids[:-1]) + 1)
-            )
-            ends = np.concatenate((starts[1:], [len(ids)]))
-            for s, e in zip(starts, ends):
-                doc_id = ids[s]
-                pos = 0
-                for _page, spans in _run_pages(cols, s, e, cfg, page_fn):
-                    for kind, text, media in spans:
-                        out_doc.append(doc_id)
-                        out_order.append(pos)
-                        out_kind.append(kind)
-                        out_text.append(text)
-                        out_media.append(media)
-                        pos += 1
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype=object),
-                    "order": pd.Series(out_order, dtype="int32"),
-                    "kind": pd.Series(out_kind, dtype=object),
-                    "text": pd.Series(out_text, dtype=object),
-                    "media_ref": pd.Series(out_media, dtype=object),
-                }
-            )
-
-    return run
+    return _kernel(cfg, dual, sort_cols, _doc_frame)
 
 
-def _page_mode_kernel(cfg: ExtractConfig, page_fn=_page_e1,
+def _page_mode_kernel(cfg: ExtractConfig, dual: bool = False,
                       sort_cols=("doc_id", "page", "offset")):
     """mapInPandas fn for the mega-doc path: emits page-local order."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for chunk in _sorted_partition_chunks(batches, list(sort_cols)):
-            cols = _Cols(chunk)
-            out = {k: [] for k in
-                   ("doc_id", "page", "page_pos", "kind", "text", "media_ref")}
-            ids = cols.doc_id
-            starts = np.concatenate(([0], np.flatnonzero(ids[1:] != ids[:-1]) + 1))
-            ends = np.concatenate((starts[1:], [len(ids)]))
-            for s, e in zip(starts, ends):
-                for page, spans in _run_pages(cols, s, e, cfg, page_fn):
-                    for pos, (kind, text, media) in enumerate(spans):
-                        out["doc_id"].append(ids[s])
-                        out["page"].append(page)
-                        out["page_pos"].append(pos)
-                        out["kind"].append(kind)
-                        out["text"].append(text)
-                        out["media_ref"].append(media)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype=object),
-                    "page": pd.Series(out["page"], dtype="int32"),
-                    "page_pos": pd.Series(out["page_pos"], dtype="int32"),
-                    "kind": pd.Series(out["kind"], dtype=object),
-                    "text": pd.Series(out["text"], dtype=object),
-                    "media_ref": pd.Series(out["media_ref"], dtype=object),
-                }
-            )
-
-    return run
+    return _kernel(cfg, dual, sort_cols, _page_frame)
 
 
 def explode_documents(documents: DataFrame) -> DataFrame:
@@ -350,18 +378,32 @@ def _kernel_partitions(df: DataFrame) -> int:
 MAX_MEGA_INLIST = 10_000
 
 
-def _mode_parts(pruned: DataFrame, dual: bool):
-    """(page_fn, sort_cols) for the kernel given the frame's columns.
+def route_mega_docs(
+    frame: DataFrame, mega_threshold: int
+) -> Tuple[Optional[List[str]], Optional[DataFrame]]:
+    """Mega-doc routing set: ``(mega_ids, None)`` — the driver-collected
+    ids of docs with >= ``mega_threshold`` rows in ``frame`` — or, past
+    MAX_MEGA_INLIST ids, ``(None, mega_ids_df)``, the id set as a frame
+    for broadcast semi/anti-join routing."""
+    counts = frame.groupBy("doc_id").count()
+    big = counts.filter(F.col("count") >= mega_threshold).select("doc_id")
+    sample = big.limit(MAX_MEGA_INLIST + 1).collect()
+    if len(sample) > MAX_MEGA_INLIST:
+        return None, big
+    return [r["doc_id"] for r in sample], None
+
+
+def _sort_cols(pruned: DataFrame) -> tuple:
+    """Kernel sort key given the frame's columns.
 
     Multi-detector frames carry a ``det`` column; rows must then sort
     detector-major within a page (Layout.merge appends detector 2's
     blocks after detector 1's, base_pipeline.py:104-111) with offset as
     the in-detector order — a total, deterministic key either way.
     """
-    page_fn = _page_dual if dual else _page_e1
     if "det" in pruned.columns:
-        return page_fn, ("doc_id", "page", "det", "offset")
-    return page_fn, ("doc_id", "page", "offset")
+        return ("doc_id", "page", "det", "offset")
+    return ("doc_id", "page", "offset")
 
 
 def _extract_doc_path(
@@ -378,9 +420,8 @@ def _extract_doc_path(
         shaped = pruned
     else:
         shaped = pruned.repartition(_kernel_partitions(pruned), "doc_id")
-    page_fn, sort_cols = _mode_parts(pruned, dual)
     return shaped.mapInPandas(
-        _doc_mode_kernel(cfg, page_fn, sort_cols), schema=DOC_OUT_SCHEMA
+        _doc_mode_kernel(cfg, dual, _sort_cols(pruned)), schema=DOC_OUT_SCHEMA
     )
 
 
@@ -403,9 +444,8 @@ def _extract_page_path(
     """
     # salt = page: mega docs spread across partitions by (doc_id, page)
     shaped = pruned.repartition(_kernel_partitions(pruned), "doc_id", "page")
-    page_fn, sort_cols = _mode_parts(pruned, dual)
     pages = shaped.mapInPandas(
-        _page_mode_kernel(cfg, page_fn, sort_cols), schema=PAGE_OUT_SCHEMA
+        _page_mode_kernel(cfg, dual, _sort_cols(pruned)), schema=PAGE_OUT_SCHEMA
     )
     pages = pages.localCheckpoint(eager=False)
     pcounts = pages.groupBy("doc_id", "page").agg(
@@ -444,9 +484,8 @@ def extract_pages(
         cols += DUAL_EXTRA_COLS
     pruned = joined.select(*cols)
     shaped = pruned.repartition(_kernel_partitions(pruned), "doc_id", "page")
-    page_fn, sort_cols = _mode_parts(pruned, dual)
     return shaped.mapInPandas(
-        _page_mode_kernel(cfg, page_fn, sort_cols), schema=PAGE_OUT_SCHEMA
+        _page_mode_kernel(cfg, dual, _sort_cols(pruned)), schema=PAGE_OUT_SCHEMA
     )
 
 
@@ -486,13 +525,7 @@ def extract_spans_flat(
         return _extract_page_path(pruned, cfg, dual)
 
     if mega_ids is None and mega_ids_df is None:
-        counts = pruned.groupBy("doc_id").count()
-        big = counts.filter(F.col("count") >= mega_threshold).select("doc_id")
-        sample = big.limit(MAX_MEGA_INLIST + 1).collect()
-        if len(sample) > MAX_MEGA_INLIST:
-            mega_ids_df = big
-        else:
-            mega_ids = [r["doc_id"] for r in sample]
+        mega_ids, mega_ids_df = route_mega_docs(pruned, mega_threshold)
 
     if mega_ids_df is not None:
         normal = pruned.join(F.broadcast(mega_ids_df), "doc_id", "left_anti")
@@ -550,20 +583,13 @@ def extract_spans(
                 s.withColumn("det", F.lit(i).cast("int"))
             )
 
-    mega_ids: Optional[list] = None
-    mega_ids_df: Optional[DataFrame] = None
+    mega_ids, mega_ids_df = None, None
     if mega_threshold > 0:
         # span count per doc from the PRIMARY flat sidecar: scans only
         # the doc_id column, map-side-combines, shuffles tiny partial
         # counts — far cheaper than size(spans), which would read the
         # whole nested spans column.
-        counts = sidecars[0].groupBy("doc_id").count()
-        big = counts.filter(F.col("count") >= mega_threshold).select("doc_id")
-        sample = big.limit(MAX_MEGA_INLIST + 1).collect()
-        if len(sample) > MAX_MEGA_INLIST:
-            mega_ids_df = big
-        else:
-            mega_ids = [r["doc_id"] for r in sample]
+        mega_ids, mega_ids_df = route_mega_docs(sidecars[0], mega_threshold)
     # Pre-partition BOTH join inputs by doc_id: HashPartitioning(doc_id)
     # satisfies the join's ClusteredDistribution(doc_id, offset), so the
     # join adds no exchange of its own AND its output stays clustered by
@@ -627,19 +653,7 @@ def extract_spans_dual(
     coords (DUAL_EXTRA_COLS); the kernel arbitrates OCR vs native text
     per block (levenshtein < 0.2 prefers native) after the C7
     flip+descale.  Same join/partitioning shape as extract_spans."""
-    spark = documents.sparkSession
-    subset_ok = (
-        spark.conf.get(
-            "spark.sql.requireAllClusterKeysForCoPartition", "true"
-        ).lower()
-        == "false"
-    ) and not (
-        spark.conf.get("spark.sql.adaptive.enabled", "true").lower() == "true"
-        and spark.conf.get(
-            "spark.sql.adaptive.skewJoin.enabled", "false"
-        ).lower()
-        == "true"
-    )
+    subset_ok = doc_clustering_safe(documents.sparkSession)
     spans = explode_documents(documents)
     P = _kernel_partitions(spans)
     joined = spans.repartition(P, "doc_id").join(

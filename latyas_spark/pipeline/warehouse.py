@@ -131,12 +131,11 @@ def extract_from_warehouse(
     (extract.doc_clustering_safe)."""
     from ..core.document import DEFAULT_CONFIG
     from .extract import (
-        MAX_MEGA_INLIST,
         MEGA_THRESHOLD,
         doc_clustering_safe,
         extract_spans_flat,
+        route_mega_docs,
     )
-    from pyspark.sql import functions as F
 
     if cfg is None:
         cfg = DEFAULT_CONFIG
@@ -144,16 +143,9 @@ def extract_from_warehouse(
         mega_threshold = MEGA_THRESHOLD
     spans = spark.table(spans_table)
     sidecar = spark.table(blocks_table)
-    mega_ids = None
-    mega_ids_df = None
+    mega_ids, mega_ids_df = None, None
     if mega_threshold > 0:
-        counts = sidecar.groupBy("doc_id").count()
-        big = counts.filter(F.col("count") >= mega_threshold).select("doc_id")
-        sample = big.limit(MAX_MEGA_INLIST + 1).collect()
-        if len(sample) > MAX_MEGA_INLIST:
-            mega_ids_df = big
-        else:
-            mega_ids = [r["doc_id"] for r in sample]
+        mega_ids, mega_ids_df = route_mega_docs(sidecar, mega_threshold)
     joined = spans.join(sidecar, ["doc_id", "offset"])
     return extract_spans_flat(
         joined,
