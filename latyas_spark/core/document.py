@@ -189,12 +189,6 @@ def gather_text_batch(
     return out
 
 
-# Pages with more detection candidates than this skip the vectorized
-# merge pre-test and go straight to the sweep: the test's pair count
-# grows as n^2, and the sweep dominates such a page's cost anyway.
-_PAIR_TEST_MAX = 64
-
-
 def _pages_to_sweep(
     x1: np.ndarray,
     y1: np.ndarray,
@@ -216,7 +210,7 @@ def _pages_to_sweep(
     per-page kernel always gave."""
     size = np.diff(bounds)
     seg = np.repeat(np.arange(len(size)), size)
-    sweep = size > _PAIR_TEST_MAX
+    sweep = np.zeros(len(size), dtype=bool)
     sweep[seg[np.isnan(x1) | np.isnan(y1) | np.isnan(x2) | np.isnan(y2)]] = True
     rows = np.flatnonzero(~sweep[seg] & (size[seg] >= 2))
     i, j = _ranges(rows + 1, bounds[seg[rows] + 1])

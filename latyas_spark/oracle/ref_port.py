@@ -418,6 +418,11 @@ def extract_page_oracle(
                 or inter > cfg.area_threshold * b.rect.area
             ):
                 continue
+            # keep_large/keep_small: written from the semantics that
+            # core/overlap.py cites for layout.py:108-117, NOT checked
+            # against the reference source, so for these two strategies
+            # this oracle restates overlap.py rather than independently
+            # porting the reference
             if cfg.merge_strategy == "keep_large":  # drop the smaller; tie drops a
                 dropped.add(j if a.rect.area > b.rect.area else i)
                 continue

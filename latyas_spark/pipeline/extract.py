@@ -236,15 +236,15 @@ def _sorted_partition_chunks(
     int64/float64/bool arrays, ~100 B per pair) on top of the buffered
     partition.  They are built per window of KERNEL_WINDOW_ROWS rows, so
     they do not grow with the partition: the merge pre-test makes
-    n(n-1)/2 pairs per page of n detections and skips pages above
-    _PAIR_TEST_MAX (64) detections, so at most 32 pairs per row; the
+    n(n-1)/2 pairs per page of n detections, so n/2 pairs per row; the
     gather makes (plain text blocks x text-layer rows) pairs per page,
     none on pages without plain text blocks; containment makes
     (text blocks x embedded equations) pairs.  At the fixture shape
     (~10 rows per page) that is ~4 merge + ~7 gather pairs per row,
-    ~9 MB per 8192-row window; the bound is 32 + 2n pairs per row for
-    pages of n rows.  A single page of n rows still makes ~n^2 gather
-    pairs, as the per-page B x L intersection matrix always did.
+    ~9 MB per 8192-row window; the bound is about n/2 + 2n pairs per
+    row for pages of n rows.  A single page of n rows makes ~n^2 pairs
+    in all, the same order as the per-page B x L intersection matrix
+    always built.
     """
     parts = [pdf for pdf in batches if len(pdf)]
     if not parts:
