@@ -461,8 +461,7 @@ def _write_report(result: dict) -> None:
             "Full-width (local[32]) legs contend with the in-run host "
             "monitor, so single-run secondary numbers are noisy; the "
             "median-of-valid-attempts methodology and its measured "
-            "results live in BENCH/SECONDARY.md "
-            "(scripts/bench_secondary.py reruns just this pair).",
+            "results live in BENCH/SECONDARY.md.",
         ]
         whh = sc.get("warehouse_4_16")
         if whh:

@@ -52,10 +52,10 @@ Scale design (SURVEY.md §4.3):
   docs are routed by span count: normal docs take the single-shuffle
   doc path (reading order assigned inside the kernel); mega docs are
   re-keyed by (doc_id, page) — the salt — and their doc-wide order is
-  recovered with a window over the (much smaller) span output.  Every
-  entry point gets the mega id set from ``route_mega_docs``: a
-  map-side-combined count, collected as an isin list (a broadcast
-  semi/anti join past MAX_MEGA_INLIST ids).
+  recovered with a window over the (much smaller) span output.  One
+  builder (``_extract``) makes that routing decision for every entry
+  point: a map-side-combined count (``route_mega_docs``), collected as
+  an isin list (a broadcast semi/anti join past MAX_MEGA_INLIST ids).
 * **No per-row Python** anywhere; only the columns the kernel needs
   cross the Arrow boundary (pandas UDFs are a pushdown barrier, so
   cheap filters/pruning happen before the shuffle by construction).
@@ -63,7 +63,7 @@ Scale design (SURVEY.md §4.3):
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional, Sequence, Tuple
+from typing import Iterator, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -208,10 +208,17 @@ def _run_positions(keys: np.ndarray) -> np.ndarray:
 
 
 def _sorted_partition_chunks(
-    batches: Iterator[pd.DataFrame], sort_cols: list
+    batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
     """Buffer the WHOLE task partition, sort it vectorized in pandas,
     and yield it as one doc-contiguous chunk.
+
+    The sort key comes from the chunk's own columns: (doc_id, page,
+    offset), or (doc_id, page, det, offset) when a multi-detector
+    ``det`` column is present — rows then sort detector-major within a
+    page (Layout.merge appends detector 2's blocks after detector 1's,
+    base_pipeline.py:104-111) with offset as the in-detector order, a
+    total, deterministic key either way.
 
     Sorting here instead of a JVM SortExec keeps the heavy lifting in
     the (independently parallel) Python workers: with sort-merge join
@@ -250,22 +257,25 @@ def _sorted_partition_chunks(
     if not parts:
         return
     pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-    order = np.lexsort([pdf[c].to_numpy() for c in reversed(sort_cols)])
+    key = ["doc_id", "page", "offset"]
+    if "det" in pdf.columns:
+        key.insert(2, "det")
+    order = np.lexsort([pdf[c].to_numpy() for c in reversed(key)])
     if not np.array_equal(order, np.arange(len(order))):
         pdf = pdf.iloc[order].reset_index(drop=True)
     yield pdf
 
 
-def _kernel(cfg: ExtractConfig, dual: bool, sort_cols, frame):
-    """The one kernel driver: sort the partition, run the E1 (or dual)
-    kernel over all its pages, and hand the spans to ``frame`` for the
-    output shape."""
-    spans_of = _dual_spans if dual else _e1_spans
+def _kernel(cfg: ExtractConfig, frame):
+    """The one kernel driver: sort the partition, run the E1 kernel (or
+    the dual one, when the chunk carries ``ocr_text``) over all its
+    pages, and hand the spans to ``frame`` for the output shape."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for chunk in _sorted_partition_chunks(batches, list(sort_cols)):
+        for chunk in _sorted_partition_chunks(batches):
             cols = _Cols(chunk)
             starts = _page_starts(cols)
+            spans_of = _e1_spans if cols.ocr_text is None else _dual_spans
             yield frame(cols, starts, spans_of(cols, starts, cfg))
 
     return run
@@ -301,16 +311,14 @@ def _page_frame(cols: _Cols, starts: np.ndarray, spans: SegmentSpans) -> pd.Data
     )
 
 
-def _doc_mode_kernel(cfg: ExtractConfig, dual: bool = False,
-                     sort_cols=("doc_id", "page", "offset")):
+def _doc_mode_kernel(cfg: ExtractConfig):
     """mapInPandas fn: whole docs per chunk, doc-wide order in-kernel."""
-    return _kernel(cfg, dual, sort_cols, _doc_frame)
+    return _kernel(cfg, _doc_frame)
 
 
-def _page_mode_kernel(cfg: ExtractConfig, dual: bool = False,
-                      sort_cols=("doc_id", "page", "offset")):
+def _page_mode_kernel(cfg: ExtractConfig):
     """mapInPandas fn for the mega-doc path: emits page-local order."""
-    return _kernel(cfg, dual, sort_cols, _page_frame)
+    return _kernel(cfg, _page_frame)
 
 
 def explode_documents(documents: DataFrame) -> DataFrame:
@@ -381,10 +389,10 @@ MAX_MEGA_INLIST = 10_000
 def route_mega_docs(
     frame: DataFrame, mega_threshold: int
 ) -> Tuple[Optional[List[str]], Optional[DataFrame]]:
-    """Mega-doc routing set: ``(mega_ids, None)`` — the driver-collected
-    ids of docs with >= ``mega_threshold`` rows in ``frame`` — or, past
-    MAX_MEGA_INLIST ids, ``(None, mega_ids_df)``, the id set as a frame
-    for broadcast semi/anti-join routing."""
+    """Mega-doc routing set: ``(ids, None)`` — the driver-collected ids
+    of docs with >= ``mega_threshold`` rows in ``frame`` — or, past
+    MAX_MEGA_INLIST ids, ``(None, ids_df)``, the id set as a frame for
+    broadcast semi/anti-join routing."""
     counts = frame.groupBy("doc_id").count()
     big = counts.filter(F.col("count") >= mega_threshold).select("doc_id")
     sample = big.limit(MAX_MEGA_INLIST + 1).collect()
@@ -393,43 +401,22 @@ def route_mega_docs(
     return [r["doc_id"] for r in sample], None
 
 
-def _sort_cols(pruned: DataFrame) -> tuple:
-    """Kernel sort key given the frame's columns.
-
-    Multi-detector frames carry a ``det`` column; rows must then sort
-    detector-major within a page (Layout.merge appends detector 2's
-    blocks after detector 1's, base_pipeline.py:104-111) with offset as
-    the in-detector order — a total, deterministic key either way.
-    """
-    if "det" in pruned.columns:
-        return ("doc_id", "page", "det", "offset")
-    return ("doc_id", "page", "offset")
-
-
-def _extract_doc_path(
-    pruned: DataFrame,
-    cfg: ExtractConfig,
-    pre_partitioned: bool = False,
-    dual: bool = False,
-) -> DataFrame:
-    """Doc-grouped kernel.  ``pre_partitioned=True`` promises the input
-    is already hash(doc_id)-clustered (e.g. the output of a join whose
-    children were repartitioned by doc_id), so only a partition-local
-    sort is needed — no exchange."""
-    if pre_partitioned:
-        shaped = pruned
-    else:
-        shaped = pruned.repartition(_kernel_partitions(pruned), "doc_id")
-    return shaped.mapInPandas(
-        _doc_mode_kernel(cfg, dual, _sort_cols(pruned)), schema=DOC_OUT_SCHEMA
-    )
+def _prune(joined: DataFrame, dual: bool) -> DataFrame:
+    """The kernel's input columns: KERNEL_COLS, plus ``det`` for
+    multi-detector input, plus DUAL_EXTRA_COLS for the dual kernel —
+    the only place that decides the column set the kernel driver reads
+    its sort key and E1-or-dual choice from."""
+    cols = list(KERNEL_COLS)
+    if "det" in joined.columns:
+        cols.append("det")
+    if dual:
+        cols += DUAL_EXTRA_COLS
+    return joined.select(*cols)
 
 
-def _extract_page_path(
-    pruned: DataFrame, cfg: ExtractConfig, dual: bool = False
-) -> DataFrame:
-    """Mega-doc path: page-salted kernel, then a distributed two-level
-    doc-wide ordering.
+def _doc_order(pages: DataFrame) -> DataFrame:
+    """Doc-wide order of the page path's output: a distributed
+    two-level ordering.
 
     The naive ordering (row_number over partitionBy(doc_id)) would pull
     every output span of a mega doc through one task.  Instead the
@@ -442,11 +429,6 @@ def _extract_page_path(
     the count branch and the join branch consume it — without that the
     kernel would run twice.
     """
-    # salt = page: mega docs spread across partitions by (doc_id, page)
-    shaped = pruned.repartition(_kernel_partitions(pruned), "doc_id", "page")
-    pages = shaped.mapInPandas(
-        _page_mode_kernel(cfg, dual, _sort_cols(pruned)), schema=PAGE_OUT_SCHEMA
-    )
     pages = pages.localCheckpoint(eager=False)
     pcounts = pages.groupBy("doc_id", "page").agg(
         F.count(F.lit(1)).alias("n_spans")
@@ -477,25 +459,60 @@ def extract_pages(
     diagnostics and by the SQL-oracle-checkable flagship slice
     (registry.q_flagship_simple), where per-page positions are the
     comparable unit."""
-    cols = list(KERNEL_COLS)
-    if "det" in joined.columns:
-        cols.append("det")
-    if dual:
-        cols += DUAL_EXTRA_COLS
-    pruned = joined.select(*cols)
+    pruned = _prune(joined, dual)
+    # salt = page: mega docs spread across partitions by (doc_id, page)
     shaped = pruned.repartition(_kernel_partitions(pruned), "doc_id", "page")
-    return shaped.mapInPandas(
-        _page_mode_kernel(cfg, dual, _sort_cols(pruned)), schema=PAGE_OUT_SCHEMA
-    )
+    return shaped.mapInPandas(_page_mode_kernel(cfg), schema=PAGE_OUT_SCHEMA)
+
+
+def _extract(
+    joined: DataFrame,
+    cfg: ExtractConfig,
+    mega_threshold: int,
+    dual: bool,
+    route_on: Optional[DataFrame] = None,
+    clustered: bool = False,
+) -> DataFrame:
+    """The one extraction plan builder behind every entry point.
+
+    Prunes ``joined`` to the kernel columns, splits its docs once into
+    normal and mega (>= ``mega_threshold`` rows per doc in
+    ``route_on``, else in the pruned join; 0 sends every doc to the
+    page path, < 0 every doc to the doc path), then unions the
+    doc-grouped kernel over the normal docs with the page-salted path
+    over the mega docs.  ``clustered`` promises ``joined`` is
+    hash(doc_id)-clustered already (a co-partitioned join), so the doc
+    path needs only its partition-local sort — no exchange."""
+    pruned = _prune(joined, dual)
+    normal, mega = pruned, None
+    if mega_threshold == 0:
+        normal, mega = None, pruned
+    elif mega_threshold > 0:
+        ids, ids_df = route_mega_docs(
+            pruned if route_on is None else route_on, mega_threshold
+        )
+        if ids_df is not None:
+            normal = pruned.join(F.broadcast(ids_df), "doc_id", "left_anti")
+            mega = pruned.join(F.broadcast(ids_df), "doc_id", "left_semi")
+        elif ids:
+            normal = pruned.filter(~F.col("doc_id").isin(ids))
+            mega = pruned.filter(F.col("doc_id").isin(ids))
+    parts = []
+    if normal is not None:
+        if not clustered:
+            normal = normal.repartition(_kernel_partitions(normal), "doc_id")
+        parts.append(
+            normal.mapInPandas(_doc_mode_kernel(cfg), schema=DOC_OUT_SCHEMA)
+        )
+    if mega is not None:
+        parts.append(_doc_order(extract_pages(mega, cfg, dual)))
+    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
 
 def extract_spans_flat(
     joined: DataFrame,
     cfg: ExtractConfig = DEFAULT_CONFIG,
     mega_threshold: int = MEGA_THRESHOLD,
-    mega_ids: Optional[Sequence[str]] = None,
-    pre_partitioned: bool = False,
-    mega_ids_df: Optional[DataFrame] = None,
     dual: bool = False,
 ) -> DataFrame:
     """Extraction over an already-joined flat frame with KERNEL_COLS
@@ -503,45 +520,12 @@ def extract_spans_flat(
     ``dual=True``).
 
     Returns span rows (doc_id, order, kind, text, media_ref).  Docs
-    with >= mega_threshold spans are routed to the page-salted path;
-    pass ``mega_ids`` if the caller already knows them (e.g. from
-    ``size(spans)``), else they are found with a count aggregation.
-    Set ``mega_threshold=0`` to disable routing (all docs page path)
-    or ``mega_threshold<0`` to force the doc path.
-    ``pre_partitioned`` promises the frame is hash(doc_id)-clustered
-    already, letting the normal-doc kernel skip its exchange.
-    ``mega_ids_df`` (single ``doc_id`` column) routes via broadcast
-    semi/anti joins instead of an IN-list — the fat-skew-tail fallback.
+    with >= mega_threshold rows are routed to the page-salted path
+    (found with a count aggregation over the frame).  Set
+    ``mega_threshold=0`` to disable routing (all docs page path) or
+    ``mega_threshold<0`` to force the doc path.
     """
-    cols = list(KERNEL_COLS)
-    if "det" in joined.columns:
-        cols.append("det")
-    if dual:
-        cols += DUAL_EXTRA_COLS
-    pruned = joined.select(*cols)
-    if mega_threshold < 0:
-        return _extract_doc_path(pruned, cfg, pre_partitioned, dual)
-    if mega_threshold == 0:
-        return _extract_page_path(pruned, cfg, dual)
-
-    if mega_ids is None and mega_ids_df is None:
-        mega_ids, mega_ids_df = route_mega_docs(pruned, mega_threshold)
-
-    if mega_ids_df is not None:
-        normal = pruned.join(F.broadcast(mega_ids_df), "doc_id", "left_anti")
-        mega = pruned.join(F.broadcast(mega_ids_df), "doc_id", "left_semi")
-        return _extract_doc_path(normal, cfg, pre_partitioned, dual).unionByName(
-            _extract_page_path(mega, cfg, dual)
-        )
-
-    if not mega_ids:
-        return _extract_doc_path(pruned, cfg, pre_partitioned, dual)
-
-    normal = pruned.filter(~F.col("doc_id").isin(list(mega_ids)))
-    mega = pruned.filter(F.col("doc_id").isin(list(mega_ids)))
-    return _extract_doc_path(normal, cfg, pre_partitioned, dual).unionByName(
-        _extract_page_path(mega, cfg, dual)
-    )
+    return _extract(joined, cfg, mega_threshold, dual)
 
 
 def extract_spans(
@@ -549,6 +533,7 @@ def extract_spans(
     layout_blocks,
     cfg: ExtractConfig = DEFAULT_CONFIG,
     mega_threshold: int = MEGA_THRESHOLD,
+    dual: bool = False,
 ) -> DataFrame:
     """Flagship: nested documents + geometry sidecar(s) -> ordered spans.
 
@@ -558,6 +543,12 @@ def extract_spans(
     name with a ``det`` index; the kernel then replays Layout.merge
     order (detector-major) and the J1 overlap merge dedups the
     cross-detector duplicates.
+
+    ``dual=True`` runs the dual-source (E2, pdf2txt.py) DAG: the
+    sidecar additionally carries the per-row OCR output and the
+    text-layer rect in PDF coords (DUAL_EXTRA_COLS); the kernel
+    arbitrates OCR vs native text per block (levenshtein < 0.2 prefers
+    native) after the C7 flip+descale.
 
     Mega-doc routing uses a driver-collected mega id list: the
     resulting ``doc_id IN (...)`` predicates are pushed by Catalyst
@@ -582,14 +573,6 @@ def extract_spans(
             sidecar = sidecar.unionByName(
                 s.withColumn("det", F.lit(i).cast("int"))
             )
-
-    mega_ids, mega_ids_df = None, None
-    if mega_threshold > 0:
-        # span count per doc from the PRIMARY flat sidecar: scans only
-        # the doc_id column, map-side-combines, shuffles tiny partial
-        # counts — far cheaper than size(spans), which would read the
-        # whole nested spans column.
-        mega_ids, mega_ids_df = route_mega_docs(sidecars[0], mega_threshold)
     # Pre-partition BOTH join inputs by doc_id: HashPartitioning(doc_id)
     # satisfies the join's ClusteredDistribution(doc_id, offset), so the
     # join adds no exchange of its own AND its output stays clustered by
@@ -598,20 +581,18 @@ def extract_spans(
     # warehouse scale the same effect comes from bucketing both tables
     # by doc_id (warehouse.extract_from_warehouse — ZERO input shuffle);
     # this is the unbucketed equivalent.
-    spark = documents.sparkSession
-    subset_ok = doc_clustering_safe(spark)
     spans = explode_documents(documents)
     P = _kernel_partitions(spans)
     joined = spans.repartition(P, "doc_id").join(
         sidecar.repartition(P, "doc_id"), ["doc_id", "offset"]
     )
-    return extract_spans_flat(
-        joined,
-        cfg,
-        mega_threshold=mega_threshold,
-        mega_ids=mega_ids,
-        pre_partitioned=subset_ok,
-        mega_ids_df=mega_ids_df,
+    # span count per doc from the PRIMARY flat sidecar: scans only the
+    # doc_id column, map-side-combines, shuffles tiny partial counts —
+    # far cheaper than size(spans), which would read the whole nested
+    # spans column.
+    return _extract(
+        joined, cfg, mega_threshold, dual, route_on=sidecars[0],
+        clustered=doc_clustering_safe(documents.sparkSession),
     )
 
 
@@ -628,43 +609,15 @@ def extract_spans_preset(
 
     if not isinstance(preset, Preset):
         preset = get_preset(preset)
-    sidecars = (
-        [layout_blocks] if isinstance(layout_blocks, DataFrame)
-        else list(layout_blocks)
-    )
-    if len(sidecars) != preset.n_detectors:
+    n = 1 if isinstance(layout_blocks, DataFrame) else len(layout_blocks)
+    if n != preset.n_detectors:
         raise ValueError(
             f"preset {preset.name!r} binds {preset.n_detectors} layout "
-            f"detector(s); got {len(sidecars)} sidecar(s)"
+            f"detector(s); got {n} sidecar(s)"
         )
     return extract_spans(
-        documents, sidecars, cfg=preset.config, mega_threshold=mega_threshold
-    )
-
-
-def extract_spans_dual(
-    documents: DataFrame,
-    layout_blocks: DataFrame,
-    cfg: ExtractConfig = DEFAULT_CONFIG,
-    mega_threshold: int = MEGA_THRESHOLD,
-) -> DataFrame:
-    """Dual-source (E2, pdf2txt.py) extraction: the sidecar additionally
-    carries the per-row OCR output and the text-layer rect in PDF
-    coords (DUAL_EXTRA_COLS); the kernel arbitrates OCR vs native text
-    per block (levenshtein < 0.2 prefers native) after the C7
-    flip+descale.  Same join/partitioning shape as extract_spans."""
-    subset_ok = doc_clustering_safe(documents.sparkSession)
-    spans = explode_documents(documents)
-    P = _kernel_partitions(spans)
-    joined = spans.repartition(P, "doc_id").join(
-        layout_blocks.repartition(P, "doc_id"), ["doc_id", "offset"]
-    )
-    return extract_spans_flat(
-        joined,
-        cfg,
+        documents, layout_blocks, cfg=preset.config,
         mega_threshold=mega_threshold,
-        pre_partitioned=subset_ok,
-        dual=True,
     )
 
 

@@ -30,6 +30,14 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..core.document import DEFAULT_CONFIG, ExtractConfig
+from .extract import (
+    MEGA_THRESHOLD,
+    _extract,
+    doc_clustering_safe,
+    explode_documents,
+)
+
 
 def write_bucketed(
     df: DataFrame,
@@ -92,8 +100,6 @@ def ingest_corpus(
     the SAME bucket count.  Every subsequent extraction run
     (extract_from_warehouse) then joins and feeds the kernel with zero
     input shuffle.  Returns (spans_table, blocks_table)."""
-    from .extract import explode_documents
-
     docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
     blocks = spark.read.parquet(f"{corpus_dir}/layout_blocks.parquet")
     spans_t, blocks_t = f"{prefix}_spans", f"{prefix}_blocks"
@@ -112,8 +118,8 @@ def extract_from_warehouse(
     spark: SparkSession,
     spans_table: str,
     blocks_table: str,
-    cfg=None,
-    mega_threshold: Optional[int] = None,
+    cfg: ExtractConfig = DEFAULT_CONFIG,
+    mega_threshold: int = MEGA_THRESHOLD,
 ) -> DataFrame:
     """Flagship extraction fed from the bucketed warehouse: ZERO input
     exchange.  Both bucketed scans report HashPartitioning(doc_id), so
@@ -129,29 +135,9 @@ def extract_from_warehouse(
     Falls back to an explicit kernel repartition when the session's
     settings make subset-key co-partitioning unsafe
     (extract.doc_clustering_safe)."""
-    from ..core.document import DEFAULT_CONFIG
-    from .extract import (
-        MEGA_THRESHOLD,
-        doc_clustering_safe,
-        extract_spans_flat,
-        route_mega_docs,
-    )
-
-    if cfg is None:
-        cfg = DEFAULT_CONFIG
-    if mega_threshold is None:
-        mega_threshold = MEGA_THRESHOLD
-    spans = spark.table(spans_table)
     sidecar = spark.table(blocks_table)
-    mega_ids, mega_ids_df = None, None
-    if mega_threshold > 0:
-        mega_ids, mega_ids_df = route_mega_docs(sidecar, mega_threshold)
-    joined = spans.join(sidecar, ["doc_id", "offset"])
-    return extract_spans_flat(
-        joined,
-        cfg,
-        mega_threshold=mega_threshold,
-        mega_ids=mega_ids,
-        pre_partitioned=doc_clustering_safe(spark),
-        mega_ids_df=mega_ids_df,
+    joined = spark.table(spans_table).join(sidecar, ["doc_id", "offset"])
+    return _extract(
+        joined, cfg, mega_threshold, False, route_on=sidecar,
+        clustered=doc_clustering_safe(spark),
     )

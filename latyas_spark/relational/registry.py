@@ -827,7 +827,7 @@ def q_dual_arbitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset order), then the levenshtein pick — OCR output is a
     deterministic corruption of the native text so both branches fire.
     The full pipeline stage (merge + xy-cut + emission) is the
-    extract_spans_dual kernel, golden-tested; this query is the
+    extract_spans(..., dual=True) kernel, golden-tested; this query is the
     SQL-oracle-checkable slice of it."""
     b = synth_blocks(spark, sf_dir).withColumn("kind", _classify_col())
     rs, H = 2.0, 550.0
@@ -3803,9 +3803,7 @@ def _mix_markdown(blocks: DataFrame, spark: SparkSession) -> DataFrame:
         # per-batch grouping would split a (doc_id, page) group across
         # batches on any partition over 100k rows and emit duplicate
         # partial markdown rows for the same page.
-        for pdf in _sorted_partition_chunks(
-            batches, ["doc_id", "page", "offset"]
-        ):
+        for pdf in _sorted_partition_chunks(batches):
             out_doc, out_page, out_md = [], [], []
             for (doc_id, page), g in pdf.groupby(["doc_id", "page"], sort=True):
                 texts, eqs = [], []

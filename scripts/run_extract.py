@@ -17,6 +17,12 @@ from pyspark.sql import SparkSession
 
 
 def main() -> None:
+    from latyas_spark.pipeline.extract import (
+        KERNEL_COLS,
+        MEGA_THRESHOLD,
+        explode_documents,
+    )
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True,
                     help="documents table (nested spans): parquet or JSON-lines")
@@ -28,14 +34,13 @@ def main() -> None:
     ap.add_argument("--sidecar", required=True, help="layout_blocks parquet")
     ap.add_argument("--output", required=True, help="output dir (spans + _checkpoint)")
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--mega-threshold", type=int, default=5000)
+    ap.add_argument("--mega-threshold", type=int, default=MEGA_THRESHOLD)
     ap.add_argument("--cjk-filters", action="store_true")
     ap.add_argument("--run-id", default="run-0")
     args = ap.parse_args()
 
     from latyas_spark.core.document import ExtractConfig
     from latyas_spark.pipeline.checkpoint import run_checkpointed
-    from latyas_spark.pipeline.extract import KERNEL_COLS, explode_documents
     from latyas_spark.pipeline.sources import read_interleaved_docs
 
     spark = SparkSession.builder.appName("latyas-extract").getOrCreate()

@@ -65,7 +65,7 @@ def test_levenshtein_cross_check():
 def test_dual_golden_spark_vs_oracle(spark, corpus_dir):
     docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
     blocks = spark.read.parquet(f"{corpus_dir}/layout_blocks.parquet")
-    got = _spark_by_doc(EX.extract_spans_dual(docs, blocks))
+    got = _spark_by_doc(EX.extract_spans(docs, blocks, dual=True))
 
     want = {}
     for doc_id, rows in _rows_by_doc().items():

@@ -194,12 +194,9 @@ def test_multi_detector_frames_equal_per_page_kernel(docs, rnd, cut, window):
     perm = list(range(len(rows)))
     rnd.shuffle(perm)
     batches = _batches(_frame(rows, EX.KERNEL_COLS + ["det"], perm), cut)
-    sort_cols = ("doc_id", "page", "det", "offset")
 
-    doc_out = _run(EX._doc_mode_kernel(DEFAULT_CONFIG, sort_cols=sort_cols),
-                   batches, window)
-    page_out = _run(EX._page_mode_kernel(DEFAULT_CONFIG, sort_cols=sort_cols),
-                    batches, window)
+    doc_out = _run(EX._doc_mode_kernel(DEFAULT_CONFIG), batches, window)
+    page_out = _run(EX._page_mode_kernel(DEFAULT_CONFIG), batches, window)
     for doc in docs:
         if not doc:
             continue

@@ -88,14 +88,17 @@ def test_plan_has_no_python_row_udfs(spark, corpus_dir):
     assert "MapInPandas" in plan  # Arrow-batched kernel stage
 
 
-def test_page_path_equals_doc_path(spark, corpus_dir):
+@pytest.mark.parametrize("dual", [False, True])
+def test_page_path_equals_doc_path(spark, corpus_dir, dual):
     """Skew routing invariant: the mega-doc (page-salted + window) path
-    produces exactly the same spans as the doc path."""
+    produces exactly the same spans as the doc path, for the E1 and the
+    dual-source kernel."""
     docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
     blocks = spark.read.parquet(f"{corpus_dir}/layout_blocks.parquet")
 
     def collect(mega_threshold):
-        out = extract_spans(docs, blocks, mega_threshold=mega_threshold)
+        out = extract_spans(docs, blocks, mega_threshold=mega_threshold,
+                            dual=dual)
         return sorted(
             (r["doc_id"], r["order"], r["kind"], r["text"], r["media_ref"])
             for r in out.collect()
