@@ -5,10 +5,22 @@ The driver smoke/correctness harness provides TPC-H-ish parquet only;
 the extraction engine needs (bbox, conf, label, text, media) rows.  We
 derive them from the ``events`` table with arithmetic that DuckDB can
 reproduce verbatim, so sub-operator queries over this corpus can be
-oracle-checked SQL-to-SQL (see relational/queries.py).
+oracle-checked SQL-to-SQL (see relational/registry.py).
 
-Every expression below is mirrored in ``SYNTH_BLOCKS_SQL``; keep the
-two in sync.
+Each geometry family is ONE SQL text over ``{events}`` (``FAMILY_SQL``):
+``synth_blocks`` runs it on Spark and the registry's DuckDB oracles
+embed the same text with ``events`` substituted.  The texts keep to
+the dialect both Spark 4.1 and DuckDB 1.0 parse:
+
+* ``split_part('<labels csv>', ',', i)`` picks a label (DuckDB's
+  ``[...][i]`` list literal does not parse in Spark);
+* ``CAST(... AS STRING)``, never ``AS VARCHAR`` (Spark rejects it
+  without a length);
+* a bare ``AS offset`` alias works in both engines; a bare ``offset``
+  in an expression does not parse in DuckDB, so qualify it (``b.offset``);
+* ``floor(rn / 3)``, never DuckDB's ``//``;
+* operands are cast to DOUBLE before dividing, because Spark parses
+  ``100.0`` as DECIMAL.
 """
 
 from __future__ import annotations
@@ -26,756 +38,259 @@ ADAPTER_LABELS = [
 # labels whose kind is a media kind (from_str: figure/icon/qrcode)
 MEDIA_LABELS = ("figure", "icon", "qrcode")
 
-
-def synth_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet -> flat kernel-input frame (KERNEL_COLS shape)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    labels_arr = F.array(*[F.lit(s) for s in ADAPTER_LABELS])
-    df = ev.select(
-        F.concat(
-            F.lit("evdoc-"), F.lpad((F.col("user_id") % 200).cast("string"), 5, "0")
-        ).alias("doc_id"),
-        (F.col("event_id") % 3).cast("int").alias("page"),
-        F.col("event_id").alias("event_id"),
-        ((F.col("event_id") * 131) % 700).cast("double").alias("x1"),
-        ((F.col("event_id") * 197) % 900).cast("double").alias("y1"),
-        (40 + (F.col("event_id") * 17) % 260).cast("double").alias("w"),
-        (20 + (F.col("event_id") * 23) % 80).cast("double").alias("h"),
-        (((F.col("event_id") * 7) % 100) / 100.0).alias("conf"),
-        F.element_at(labels_arr, ((F.col("event_id") * 13) % 18 + 1).cast("int")).alias(
-            "label"
-        ),
-        F.col("event_type"),
-    )
-    df = df.select(
-        "doc_id",
-        "page",
-        "event_id",
-        "x1",
-        "y1",
-        (F.col("x1") + F.col("w")).alias("x2"),
-        (F.col("y1") + F.col("h")).alias("y2"),
-        "conf",
-        "label",
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS), F.lit(None).cast("string")
-        )
-        .otherwise(F.concat("event_type", F.lit(" "), F.col("event_id").cast("string")))
-        .alias("text"),
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS),
-            F.concat(F.lit("media://"), F.col("event_id").cast("string")),
-        )
-        .otherwise(F.lit(None).cast("string"))
-        .alias("media_ref"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy("event_id")
-    return df.select(
-        "doc_id",
-        "page",
-        (F.row_number().over(w) - 1).cast("int").alias("offset"),
-        "x1", "y1", "x2", "y2", "conf", "label", "text", "media_ref",
-    )
-
-
-def _with_dual_columns(b: DataFrame) -> DataFrame:
-    """Decorate a KERNEL_COLS frame with the dual-source (E2) columns:
-    a deterministic OCR corruption (offset%4: reversed, else a<->e
-    swapped — both arbitration branches fire) and the text-layer rect
-    as the exact C7 image of the bbox (rs=2, H=550; matches
-    q_dual_arbitrate).  Shared by every synth_blocks_dual_* family."""
-    rs, H = 2.0, 550.0
-    return b.select(
-        "*",
-        F.when(F.col("text").isNull(), F.lit(None).cast("string"))
-        .when(F.col("offset") % 4 == 0, F.reverse(F.col("text")))
-        .otherwise(F.translate(F.col("text"), "ae", "ea"))
-        .alias("ocr_text"),
-        (F.col("x1") / rs).alias("lx1"),
-        (H - F.col("y2") / rs).alias("ly1"),
-        (F.col("x2") / rs).alias("lx2"),
-        (H - F.col("y1") / rs).alias("ly2"),
-    )
-
-
-def synth_blocks_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """synth_blocks + the dual-source (E2) columns (_with_dual_columns)."""
-    return _with_dual_columns(synth_blocks(spark, sf_dir))
-
-
-# Labels for the cut-free corpus: ADAPTER_LABELS minus embedeq (no
+# Labels for the xy-cut families: ADAPTER_LABELS minus embedeq (no
 # containment/texmix on these pages by construction).
 SIMPLE_LABELS = [s for s in ADAPTER_LABELS if s != "embedeq"]
 
-
-def synth_blocks_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cut-free single-column page family (KERNEL_COLS shape).
-
-    Geometry is constructed so the xy-cut recursion provably reduces to
-    an ascending-y sort, making the WHOLE extraction DAG expressible in
-    SQL (registry.q_flagship_simple's oracle):
-
-      * every pair of blocks overlaps in x (x1 in [100,150], width
-        >= 300): a real vertical split would need two x-disjoint
-        blocks, so no depth-0 cut fires;
-      * blocks are y-stacked at pitch 125 with heights <= 99, so every
-        consecutive y-gap is >= 26 > 2*margin(10): each depth-1
-        horizontal cut isolates one block -> reading order == y order;
-      * no embedeq labels (no containment stage), no overlapping pairs
-        (zero intersection areas -> no merge).
-
-    Low-confidence rows still land in the text layer, so the gather
-    stage stays live.  Mirrored in SYNTH_SIMPLE_SQL.
-    """
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    labels_arr = F.array(*[F.lit(s) for s in SIMPLE_LABELS])
-    base = ev.select(
-        F.concat(
-            F.lit("simdoc-"), F.lpad((F.col("user_id") % 200).cast("string"), 5, "0")
-        ).alias("doc_id"),
-        (F.col("event_id") % 3).cast("int").alias("page"),
-        F.col("event_id"),
-        (100 + (F.col("event_id") * 7) % 50).cast("double").alias("x1"),
-        (300 + (F.col("event_id") * 11) % 100).cast("double").alias("w"),
-        (20 + (F.col("event_id") * 23) % 80).cast("double").alias("h"),
-        (((F.col("event_id") * 7) % 100) / 100.0).alias("conf"),
-        F.element_at(
-            labels_arr, ((F.col("event_id") * 13) % 17 + 1).cast("int")
-        ).alias("label"),
-        F.col("event_type"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id", "page").orderBy("event_id")
-    stacked = base.select(
-        "doc_id", "page", "event_id", "x1", "w", "h", "conf", "label",
-        "event_type",
-        ((F.row_number().over(w) - 1) * 125).cast("double").alias("y1"),
-    )
-    wd = Window.partitionBy("doc_id").orderBy("event_id")
-    return stacked.select(
-        "doc_id",
-        "page",
-        (F.row_number().over(wd) - 1).cast("int").alias("offset"),
-        "x1",
-        "y1",
-        (F.col("x1") + F.col("w")).alias("x2"),
-        (F.col("y1") + F.col("h")).alias("y2"),
-        "conf",
-        "label",
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS), F.lit(None).cast("string")
-        )
-        .otherwise(F.concat("event_type", F.lit(" "), F.col("event_id").cast("string")))
-        .alias("text"),
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS),
-            F.concat(F.lit("media://"), F.col("event_id").cast("string")),
-        )
-        .otherwise(F.lit(None).cast("string"))
-        .alias("media_ref"),
-    )
+_MEDIA_SQL = ", ".join(f"'{s}'" for s in MEDIA_LABELS)
 
 
-def synth_blocks_depth1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-column page family: exactly ONE provable depth-0 vertical
-    cut, then cut-free columns (KERNEL_COLS shape).
-
-    VERDICT r2 #5: flagship_simple's family is cut-free (the xy-cut
-    recursion no-ops), so the cross-engine hash never exercised cut
-    SELECTION.  This family pins the recursion's first branch:
-
-      * blocks alternate between two x-disjoint columns
-        (col = event_id % 2): left x in [100, 308), right in
-        [400, 608) — the >= 92px column gap dwarfs 2*margin(10), and
-        within a column every pair x-overlaps (x1 spread 50 < min
-        width 100), so the depth-0 horizontal-axis sweep admits
-        EXACTLY one valid cut, at max(left x2) + 10: any cut inside a
-        column has a straddler (all lo <= 150/450 < any hi+10
-        candidate), and later in-gap candidates are skipped as
-        near-side-empty increments (xycut.py:214-221);
-      * per page the blocks are y-stacked at pitch 125 with heights
-        <= 99 (gap >= 26 > 2*margin), so each column's depth-1
-        VERTICAL sweep isolates every block -> within-column order is
-        ascending y;
-      * reading order is therefore (column, y1) — SQL-expressible —
-        with the left segment emitted first (children pushed in
-        reverse, xycut.py:232-233);
-      * single-column pages degenerate to the cut-free case whose
-        order (ascending y) equals the same (column, y1) key;
-      * no embedeq labels, zero pair intersections (columns are
-        x-disjoint, same-page rows y-disjoint), so merge/containment
-        no-op and the gather provably returns each row's own text —
-        exactly flagship_simple's arguments.
-
-    Mirrored in SYNTH_DEPTH1_SQL."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    labels_arr = F.array(*[F.lit(s) for s in SIMPLE_LABELS])
-    base = ev.select(
-        F.concat(
-            F.lit("d1doc-"), F.lpad((F.col("user_id") % 200).cast("string"), 5, "0")
-        ).alias("doc_id"),
-        (F.col("event_id") % 3).cast("int").alias("page"),
-        F.col("event_id"),
-        (
-            100 + (F.col("event_id") % 2) * 300 + (F.col("event_id") * 7) % 50
-        ).cast("double").alias("x1"),
-        (100 + (F.col("event_id") * 11) % 60).cast("double").alias("w"),
-        (20 + (F.col("event_id") * 23) % 80).cast("double").alias("h"),
-        (((F.col("event_id") * 7) % 100) / 100.0).alias("conf"),
-        F.element_at(
-            labels_arr, ((F.col("event_id") * 13) % 17 + 1).cast("int")
-        ).alias("label"),
-        F.col("event_type"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id", "page").orderBy("event_id")
-    stacked = base.select(
-        "doc_id", "page", "event_id", "x1", "w", "h", "conf", "label",
-        "event_type",
-        ((F.row_number().over(w) - 1) * 125).cast("double").alias("y1"),
-    )
-    wd = Window.partitionBy("doc_id").orderBy("event_id")
-    return stacked.select(
-        "doc_id",
-        "page",
-        (F.row_number().over(wd) - 1).cast("int").alias("offset"),
-        "x1",
-        "y1",
-        (F.col("x1") + F.col("w")).alias("x2"),
-        (F.col("y1") + F.col("h")).alias("y2"),
-        "conf",
-        "label",
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS), F.lit(None).cast("string")
-        )
-        .otherwise(F.concat("event_type", F.lit(" "), F.col("event_id").cast("string")))
-        .alias("text"),
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS),
-            F.concat(F.lit("media://"), F.col("event_id").cast("string")),
-        )
-        .otherwise(F.lit(None).cast("string"))
-        .alias("media_ref"),
-    )
-
-
-SYNTH_DEPTH1_SQL = """
+def _family_sql(
+    prefix: str,
+    x1: str,
+    y1: str,
+    w: str,
+    h: str = "20 + (event_id * 23) % 80",
+    labels: list[str] = SIMPLE_LABELS,
+    rn_by: str = "doc_id, page",
+) -> str:
+    """One family's SQL text over ``{events}``: the columns every family
+    shares (doc id, page, conf, label, the doc-wide ``offset``, the
+    text/media_ref tail) around its geometry.  ``x1``/``y1``/``w``/``h``
+    are integer expressions over ``event_id`` and ``rn``, the 0-based
+    row number within ``rn_by`` in event_id order."""
+    csv = ",".join(labels)
+    return f"""
 WITH base AS (
   SELECT
-    'd1doc-' || lpad(CAST(user_id % 200 AS VARCHAR), 5, '0') AS doc_id,
+    '{prefix}' || lpad(CAST(user_id % 200 AS STRING), 5, '0') AS doc_id,
     CAST(event_id % 3 AS INT) AS page,
     event_id,
-    CAST(100 + (event_id % 2) * 300 + (event_id * 7) % 50 AS DOUBLE) AS x1,
-    CAST(100 + (event_id * 11) % 60 AS DOUBLE) AS w,
-    CAST(20 + (event_id * 23) % 80 AS DOUBLE) AS h,
-    ((event_id * 7) % 100) / 100.0 AS conf,
-    (['text','Text','title','figure','figure_caption','table','header',
-      'footer','reference','equation','TOC','list','icon',
-      'qrcode','textwithequation','blob','caption'])[
-        CAST((event_id * 13) % 17 + 1 AS INT)] AS label,
-    event_type
-  FROM events
-), stacked AS (
+    event_type,
+    CAST((event_id * 7) % 100 AS DOUBLE) / 100 AS conf,
+    split_part('{csv}', ',',
+               CAST((event_id * 13) % {len(labels)} + 1 AS INT)) AS label
+  FROM {{events}}
+), numbered AS (
   SELECT *,
-    CAST((row_number() OVER (PARTITION BY doc_id, page ORDER BY event_id)
-          - 1) * 125 AS DOUBLE) AS y1
+    row_number() OVER (PARTITION BY {rn_by} ORDER BY event_id) - 1 AS rn
   FROM base
-)
-SELECT
-  doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY event_id) - 1 AS INT)
-    AS "offset",
-  x1, y1, x1 + w AS x2, y1 + h AS y2, conf, label,
-  CASE WHEN label IN ('figure','icon','qrcode') THEN NULL
-       ELSE event_type || ' ' || CAST(event_id AS VARCHAR) END AS text,
-  CASE WHEN label IN ('figure','icon','qrcode')
-       THEN 'media://' || CAST(event_id AS VARCHAR)
-       ELSE NULL END AS media_ref
-FROM stacked
-"""
-
-
-def synth_blocks_threecol(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three-column page family: exactly TWO provable depth-0 vertical
-    cuts (a MULTI-segment split), then cut-free columns.
-
-    flagship_depth1 pins single-cut selection; this family pins the
-    nseg>2 path — candidate dedup across a gap (the far-side candidate
-    of an already-consumed gap is skipped as near-side-empty,
-    xycut.py:214-221), bisect segment assignment over MULTIPLE cuts,
-    and the reversed push of 3 children (xycut.py:232-233):
-
-      * col = event_id % 3 at x bases 100/400/700 with x1 spread < 50
-        and widths in [100,160): columns occupy [100,310), [400,610),
-        [700,910) — both inter-column gaps are >= 90 >> margin 10, and
-        within a column all pairs x-overlap, so the depth-0 sweep
-        admits exactly one valid cut per gap -> 3 segments in
-        left-to-right order;
-      * per page blocks are y-stacked at pitch 125 with heights <= 99
-        (same argument as synth_blocks_depth1), so each column's
-        depth-1 vertical sweep isolates every block;
-      * reading order is therefore (column, y1), columns left first —
-        SQL-expressible;
-      * no embedeq labels, zero pair intersections -> merge,
-        containment and texmix all no-op, gather returns each row's
-        own text.
-
-    Mirrored in SYNTH_THREECOL_SQL."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    labels_arr = F.array(*[F.lit(s) for s in SIMPLE_LABELS])
-    base = ev.select(
-        F.concat(
-            F.lit("c3doc-"), F.lpad((F.col("user_id") % 200).cast("string"), 5, "0")
-        ).alias("doc_id"),
-        (F.col("event_id") % 3).cast("int").alias("page"),
-        F.col("event_id"),
-        (
-            100 + (F.col("event_id") % 3) * 300 + (F.col("event_id") * 7) % 50
-        ).cast("double").alias("x1"),
-        (100 + (F.col("event_id") * 11) % 60).cast("double").alias("w"),
-        (20 + (F.col("event_id") * 23) % 80).cast("double").alias("h"),
-        (((F.col("event_id") * 7) % 100) / 100.0).alias("conf"),
-        F.element_at(
-            labels_arr, ((F.col("event_id") * 13) % 17 + 1).cast("int")
-        ).alias("label"),
-        F.col("event_type"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id", "page").orderBy("event_id")
-    stacked = base.select(
-        "doc_id", "page", "event_id", "x1", "w", "h", "conf", "label",
-        "event_type",
-        ((F.row_number().over(w) - 1) * 125).cast("double").alias("y1"),
-    )
-    wd = Window.partitionBy("doc_id").orderBy("event_id")
-    return stacked.select(
-        "doc_id",
-        "page",
-        (F.row_number().over(wd) - 1).cast("int").alias("offset"),
-        "x1",
-        "y1",
-        (F.col("x1") + F.col("w")).alias("x2"),
-        (F.col("y1") + F.col("h")).alias("y2"),
-        "conf",
-        "label",
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS), F.lit(None).cast("string")
-        )
-        .otherwise(F.concat("event_type", F.lit(" "), F.col("event_id").cast("string")))
-        .alias("text"),
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS),
-            F.concat(F.lit("media://"), F.col("event_id").cast("string")),
-        )
-        .otherwise(F.lit(None).cast("string"))
-        .alias("media_ref"),
-    )
-
-
-SYNTH_THREECOL_SQL = """
-WITH base AS (
-  SELECT
-    'c3doc-' || lpad(CAST(user_id % 200 AS VARCHAR), 5, '0') AS doc_id,
-    CAST(event_id % 3 AS INT) AS page,
-    event_id,
-    CAST(100 + (event_id % 3) * 300 + (event_id * 7) % 50 AS DOUBLE) AS x1,
-    CAST(100 + (event_id * 11) % 60 AS DOUBLE) AS w,
-    CAST(20 + (event_id * 23) % 80 AS DOUBLE) AS h,
-    ((event_id * 7) % 100) / 100.0 AS conf,
-    (['text','Text','title','figure','figure_caption','table','header',
-      'footer','reference','equation','TOC','list','icon',
-      'qrcode','textwithequation','blob','caption'])[
-        CAST((event_id * 13) % 17 + 1 AS INT)] AS label,
-    event_type
-  FROM events
-), stacked AS (
-  SELECT *,
-    CAST((row_number() OVER (PARTITION BY doc_id, page ORDER BY event_id)
-          - 1) * 125 AS DOUBLE) AS y1
-  FROM base
-)
-SELECT
-  doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY event_id) - 1 AS INT)
-    AS "offset",
-  x1, y1, x1 + w AS x2, y1 + h AS y2, conf, label,
-  CASE WHEN label IN ('figure','icon','qrcode') THEN NULL
-       ELSE event_type || ' ' || CAST(event_id AS VARCHAR) END AS text,
-  CASE WHEN label IN ('figure','icon','qrcode')
-       THEN 'media://' || CAST(event_id AS VARCHAR)
-       ELSE NULL END AS media_ref
-FROM stacked
-"""
-
-
-def synth_blocks_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Margin-DECAY family: a depth-3 cut that fires only because the
-    xy-cut margin decays with depth (child_m = m - depth*(m/max_depth),
-    xycut.py; reference xy_cut_reflow.py margin schedule).
-
-    Margins by depth: m0=m1=10, m2=8.75, m3=6.5625.  Per page, two
-    columns (bases 100/400); within a column, super-bands of pitch 300
-    holding a full-strip block F at y=300r (x [base, base+260]) and a
-    pair at y=300r+150: B upper-RIGHT ([base+160, base+260], y [t,
-    t+40]) and C lower-LEFT ([base+100, base+200], y [t+48, t+88]):
-
-      * depth 0 (x, m=10): only the inter-column gap (40 >= 10) cuts —
-        every in-column candidate is either near-side-empty (nothing
-        ends left of C.lo-10) or straddled by an F;
-      * depth 1 (y, m=10): band extents are y-disjoint by >= 51, so
-        cuts isolate each band; INSIDE the pair band the 8px B/C gap
-        is < 10, so the pair stays whole;
-      * depth 2 (x, m=8.75): B and C x-overlap ([base+160, base+200])
-        -> no cut, the pair descends;
-      * depth 3 (y, m=6.5625): the SAME 8px gap now satisfies
-        8 >= 6.5625 -> cut fires -> B (upper) before C (lower);
-      * a constant-margin mutant would never cut the pair and falls to
-        the depth>8 grid sort, whose key is x-major
-        (xycut._grid_sort_list) -> C (left) before B — so the hash
-        OBSERVABLY pins the decay schedule, not just cut selection;
-      * reading order is therefore exactly (column, y1) — B.y1 < C.y1 —
-        and stays (column, y1) under any conf-filter subset (removing
-        F creates no in-column depth-0 cut: the region left of C has
-        no box ends; removing B or C leaves singletons);
-      * zero pair intersections (F y-disjoint from B/C; B,C y-disjoint;
-        columns x-disjoint), no embedeq -> merge/containment/texmix
-        no-op, gather returns each row's own text.
-
-    Mirrored in SYNTH_DECAY_SQL."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    labels_arr = F.array(*[F.lit(s) for s in SIMPLE_LABELS])
-    base = ev.select(
-        F.concat(
-            F.lit("dcdoc-"), F.lpad((F.col("user_id") % 200).cast("string"), 5, "0")
-        ).alias("doc_id"),
-        (F.col("event_id") % 3).cast("int").alias("page"),
-        F.col("event_id"),
-        (100 + (F.col("event_id") % 2) * 300).cast("double").alias("colbase"),
-        (((F.col("event_id") * 7) % 100) / 100.0).alias("conf"),
-        F.element_at(
-            labels_arr, ((F.col("event_id") * 13) % 17 + 1).cast("int")
-        ).alias("label"),
-        F.col("event_type"),
-    )
-    from pyspark.sql import Window
-
-    wcol = Window.partitionBy("doc_id", "page", "colbase").orderBy("event_id")
-    rn = F.row_number().over(wcol) - 1
-    role = rn % 3  # 0 = F full-strip, 1 = B upper-right, 2 = C lower-left
-    band_y = (F.floor(rn / 3) * 300).cast("double")
-    placed = base.select(
-        "doc_id", "page", "event_id", "conf", "label", "event_type",
-        (
-            F.col("colbase")
-            + F.when(role == 1, F.lit(160.0))
-            .when(role == 2, F.lit(100.0))
-            .otherwise(F.lit(0.0))
-        ).alias("x1"),
-        F.when(role == 0, F.lit(260.0)).otherwise(F.lit(100.0)).alias("w"),
-        (
-            band_y
-            + F.when(role == 1, F.lit(150.0))
-            .when(role == 2, F.lit(198.0))
-            .otherwise(F.lit(0.0))
-        ).alias("y1"),
-        F.when(role == 0, (20 + (F.col("event_id") * 23) % 80).cast("double"))
-        .otherwise(F.lit(40.0))
-        .alias("h"),
-    )
-    wd = Window.partitionBy("doc_id").orderBy("event_id")
-    return placed.select(
-        "doc_id",
-        "page",
-        (F.row_number().over(wd) - 1).cast("int").alias("offset"),
-        "x1",
-        "y1",
-        (F.col("x1") + F.col("w")).alias("x2"),
-        (F.col("y1") + F.col("h")).alias("y2"),
-        "conf",
-        "label",
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS), F.lit(None).cast("string")
-        )
-        .otherwise(F.concat("event_type", F.lit(" "), F.col("event_id").cast("string")))
-        .alias("text"),
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS),
-            F.concat(F.lit("media://"), F.col("event_id").cast("string")),
-        )
-        .otherwise(F.lit(None).cast("string"))
-        .alias("media_ref"),
-    )
-
-
-SYNTH_DECAY_SQL = """
-WITH base AS (
-  SELECT
-    'dcdoc-' || lpad(CAST(user_id % 200 AS VARCHAR), 5, '0') AS doc_id,
-    CAST(event_id % 3 AS INT) AS page,
-    event_id,
-    CAST(100 + (event_id % 2) * 300 AS DOUBLE) AS colbase,
-    ((event_id * 7) % 100) / 100.0 AS conf,
-    (['text','Text','title','figure','figure_caption','table','header',
-      'footer','reference','equation','TOC','list','icon',
-      'qrcode','textwithequation','blob','caption'])[
-        CAST((event_id * 13) % 17 + 1 AS INT)] AS label,
-    event_type
-  FROM events
 ), placed AS (
-  SELECT doc_id, page, event_id, conf, label, event_type,
-    colbase + CASE rn % 3 WHEN 1 THEN 160.0 WHEN 2 THEN 100.0
-              ELSE 0.0 END AS x1,
-    CASE rn % 3 WHEN 0 THEN 260.0 ELSE 100.0 END AS w,
-    CAST((rn // 3) * 300 AS DOUBLE)
-      + CASE rn % 3 WHEN 1 THEN 150.0 WHEN 2 THEN 198.0
-        ELSE 0.0 END AS y1,
-    CASE rn % 3 WHEN 0 THEN CAST(20 + (event_id * 23) % 80 AS DOUBLE)
-      ELSE 40.0 END AS h
-  FROM (
-    SELECT *,
-      row_number() OVER (PARTITION BY doc_id, page, colbase
-                         ORDER BY event_id) - 1 AS rn
-    FROM base
-  )
+  SELECT *,
+    CAST({x1} AS DOUBLE) AS x1, CAST({y1} AS DOUBLE) AS y1,
+    CAST({w} AS DOUBLE) AS w, CAST({h} AS DOUBLE) AS h
+  FROM numbered
 )
 SELECT
   doc_id, page,
   CAST(row_number() OVER (PARTITION BY doc_id ORDER BY event_id) - 1 AS INT)
-    AS "offset",
+    AS offset,
   x1, y1, x1 + w AS x2, y1 + h AS y2, conf, label,
-  CASE WHEN label IN ('figure','icon','qrcode') THEN NULL
-       ELSE event_type || ' ' || CAST(event_id AS VARCHAR) END AS text,
-  CASE WHEN label IN ('figure','icon','qrcode')
-       THEN 'media://' || CAST(event_id AS VARCHAR)
-       ELSE NULL END AS media_ref
+  CASE WHEN label IN ({_MEDIA_SQL}) THEN NULL
+       ELSE event_type || ' ' || CAST(event_id AS STRING) END AS text,
+  CASE WHEN label IN ({_MEDIA_SQL})
+       THEN 'media://' || CAST(event_id AS STRING) END AS media_ref
 FROM placed
 """
 
 
-def synth_blocks_dual_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cut-free family + the dual-source (E2) columns: the
-    synth_blocks_simple geometry (xy-cut provably degenerates to an
-    ascending-y sort; zero pair intersections, so overlap-merge is the
-    identity) with synth_blocks_dual's deterministic OCR corruption and
-    the text-layer rect as the exact C7 image of the bbox (rs=2,
-    H=550).  Because every page's blocks are y-disjoint, each
-    detection's flipped bbox intersects exactly its own layer rect —
-    the gather stage provably returns the row's own text — so the WHOLE
-    dual pipeline (pdf2txt.py:52-100) is SQL-expressible on this family
-    (registry.DUAL_SIMPLE_SQL)."""
-    return _with_dual_columns(synth_blocks_simple(spark, sf_dir))
+FAMILY_SQL = {
+    # The flagship corpus: scattered boxes of every label, overlapping
+    # freely, so every kernel stage does real work.
+    "events": _family_sql(
+        "evdoc-",
+        x1="(event_id * 131) % 700",
+        y1="(event_id * 197) % 900",
+        w="40 + (event_id * 17) % 260",
+        labels=ADAPTER_LABELS,
+    ),
+    # Cut-free single-column pages.  The xy-cut recursion provably
+    # reduces to an ascending-y sort, making the WHOLE extraction DAG
+    # expressible in SQL (registry.q_flagship_simple's oracle):
+    #
+    #   * every pair of blocks overlaps in x (x1 in [100,150], width
+    #     >= 300): a real vertical split would need two x-disjoint
+    #     blocks, so no depth-0 cut fires;
+    #   * blocks are y-stacked at pitch 125 with heights <= 99, so every
+    #     consecutive y-gap is >= 26 > 2*margin(10): each depth-1
+    #     horizontal cut isolates one block -> reading order == y order;
+    #   * no embedeq labels (no containment stage), no overlapping pairs
+    #     (zero intersection areas -> no merge).
+    #
+    # Low-confidence rows still land in the text layer, so the gather
+    # stage stays live.  With the dual columns, every page's blocks are
+    # y-disjoint, so each detection's flipped bbox intersects exactly
+    # its own layer rect and the dual gather returns the row's own text
+    # (registry.DUAL_SIMPLE_SQL).
+    "simple": _family_sql(
+        "simdoc-",
+        x1="100 + (event_id * 7) % 50",
+        y1="rn * 125",
+        w="300 + (event_id * 11) % 100",
+    ),
+    # Two-column pages: exactly ONE provable depth-0 vertical cut, then
+    # cut-free columns.  The cut-free family never exercises cut
+    # SELECTION; this one pins the recursion's first branch:
+    #
+    #   * blocks alternate between two x-disjoint columns
+    #     (col = event_id % 2): left x in [100, 308), right in
+    #     [400, 608) — the >= 92px column gap dwarfs 2*margin(10), and
+    #     within a column every pair x-overlaps (x1 spread 50 < min
+    #     width 100), so the depth-0 horizontal-axis sweep admits
+    #     EXACTLY one valid cut, at max(left x2) + 10: any cut inside a
+    #     column has a straddler (all lo <= 150/450 < any hi+10
+    #     candidate), and later in-gap candidates are skipped as
+    #     near-side-empty increments (xycut.py:214-221);
+    #   * per page the blocks are y-stacked at pitch 125 with heights
+    #     <= 99 (gap >= 26 > 2*margin), so each column's depth-1
+    #     VERTICAL sweep isolates every block -> within-column order is
+    #     ascending y;
+    #   * reading order is therefore (column, y1) — SQL-expressible —
+    #     with the left segment emitted first (children pushed in
+    #     reverse, xycut.py:232-233);
+    #   * single-column pages degenerate to the cut-free case whose
+    #     order (ascending y) equals the same (column, y1) key;
+    #   * no embedeq labels, zero pair intersections (columns are
+    #     x-disjoint, same-page rows y-disjoint), so merge/containment
+    #     no-op and the gather provably returns each row's own text —
+    #     exactly the cut-free family's arguments.
+    #
+    # Each argument is an all-pairs property, so it holds for every
+    # subset of the blocks: the dual DAG's conf + arb-kind + CJK
+    # filters leave the (column, y1) order intact.
+    "depth1": _family_sql(
+        "d1doc-",
+        x1="100 + (event_id % 2) * 300 + (event_id * 7) % 50",
+        y1="rn * 125",
+        w="100 + (event_id * 11) % 60",
+    ),
+    # Three-column pages: exactly TWO provable depth-0 vertical cuts (a
+    # MULTI-segment split), then cut-free columns.  depth1 pins
+    # single-cut selection; this family pins the nseg>2 path —
+    # candidate dedup across a gap (the far-side candidate of an
+    # already-consumed gap is skipped as near-side-empty,
+    # xycut.py:214-221), bisect segment assignment over MULTIPLE cuts,
+    # and the reversed push of 3 children (xycut.py:232-233):
+    #
+    #   * col = event_id % 3 at x bases 100/400/700 with x1 spread < 50
+    #     and widths in [100,160): columns occupy [100,310), [400,610),
+    #     [700,910) — both inter-column gaps are >= 90 >> margin 10, and
+    #     within a column all pairs x-overlap, so the depth-0 sweep
+    #     admits exactly one valid cut per gap -> 3 segments in
+    #     left-to-right order;
+    #   * per page blocks are y-stacked at pitch 125 with heights <= 99
+    #     (same argument as depth1), so each column's depth-1 vertical
+    #     sweep isolates every block;
+    #   * reading order is therefore (column, y1), columns left first —
+    #     SQL-expressible, and subset-stable as for depth1;
+    #   * no embedeq labels, zero pair intersections -> merge,
+    #     containment and texmix all no-op, gather returns each row's
+    #     own text.
+    "threecol": _family_sql(
+        "c3doc-",
+        x1="100 + (event_id % 3) * 300 + (event_id * 7) % 50",
+        y1="rn * 125",
+        w="100 + (event_id * 11) % 60",
+    ),
+    # Margin DECAY: a depth-3 cut that fires only because the xy-cut
+    # margin decays with depth (child_m = m - depth*(m/max_depth),
+    # xycut.py; reference xy_cut_reflow.py margin schedule).
+    #
+    # Margins by depth: m0=m1=10, m2=8.75, m3=6.5625.  Per page, two
+    # columns (bases 100/400); within a column, super-bands of pitch 300
+    # holding a full-strip block F at y=300r (x [base, base+260]) and a
+    # pair at y=300r+150: B upper-RIGHT ([base+160, base+260], y [t,
+    # t+40]) and C lower-LEFT ([base+100, base+200], y [t+48, t+88]):
+    #
+    #   * depth 0 (x, m=10): only the inter-column gap (40 >= 10) cuts —
+    #     every in-column candidate is either near-side-empty (nothing
+    #     ends left of C.lo-10) or straddled by an F;
+    #   * depth 1 (y, m=10): band extents are y-disjoint by >= 51, so
+    #     cuts isolate each band; INSIDE the pair band the 8px B/C gap
+    #     is < 10, so the pair stays whole;
+    #   * depth 2 (x, m=8.75): B and C x-overlap ([base+160, base+200])
+    #     -> no cut, the pair descends;
+    #   * depth 3 (y, m=6.5625): the SAME 8px gap now satisfies
+    #     8 >= 6.5625 -> cut fires -> B (upper) before C (lower);
+    #   * a constant-margin mutant would never cut the pair and falls to
+    #     the depth>8 grid sort, whose key is x-major
+    #     (xycut._grid_sort_list) -> C (left) before B — so the hash
+    #     OBSERVABLY pins the decay schedule, not just cut selection;
+    #   * reading order is therefore exactly (column, y1) — B.y1 < C.y1 —
+    #     and stays (column, y1) under any conf-filter subset (removing
+    #     F creates no in-column depth-0 cut: the region left of C has
+    #     no box ends; removing B or C leaves singletons);
+    #   * zero pair intersections (F y-disjoint from B/C; B,C y-disjoint;
+    #     columns x-disjoint), no embedeq -> merge/containment/texmix
+    #     no-op, gather returns each row's own text.
+    #
+    # rn % 3 is the role: 0 = F full-strip, 1 = B upper-right,
+    # 2 = C lower-left.
+    "decay": _family_sql(
+        "dcdoc-",
+        x1="100 + (event_id % 2) * 300"
+        " + CASE rn % 3 WHEN 1 THEN 160 WHEN 2 THEN 100 ELSE 0 END",
+        y1="floor(rn / 3) * 300"
+        " + CASE rn % 3 WHEN 1 THEN 150 WHEN 2 THEN 198 ELSE 0 END",
+        w="CASE rn % 3 WHEN 0 THEN 260 ELSE 100 END",
+        h="CASE rn % 3 WHEN 0 THEN 20 + (event_id * 23) % 80 ELSE 40 END",
+        rn_by="doc_id, page, event_id % 2",
+    ),
+    # Conflict-free mixed text+equation pages.  One box per 80px line
+    # band per (doc_id, page): y1 = band * 80 exactly, so the mix
+    # kernel's band snap is the identity and every box sits alone on
+    # its row.  On this family every data-dependent branch of the
+    # interleave provably no-ops:
+    #
+    #   * ``merge_same_row`` sees no same-row pair -> identity;
+    #   * ``split_conflict`` sees no text/latex row conflict -> no
+    #     truncate/split/re-enqueue;
+    #   * the re-recognition gather returns each text box's own content
+    #     (no other box shares its row);
+    #   * the ``\tag`` splice needs an isolated formula and a text box
+    #     on ONE row -> never fires;
+    #   * contents carry no ``$``/backslash/brace, so to_katex and
+    #     normalize_inline reduce to space-collapse + trim.
+    #
+    # What remains — classify, conf filter, kind routing, $/$$ wrapping,
+    # row-major assembly, final strip — is ANSI-SQL, so the REAL kernel
+    # (registry.q_mix_simple runs compose_mixed_page unchanged) is
+    # hash-checked end-to-end on this slice; the general corpus stays
+    # rows-only (q_mix_interleave, pinned by tests/test_mixkernel.py).
+    "mix": _family_sql(
+        "mixdoc-",
+        x1="(event_id * 131) % 700",
+        y1="rn * 80",
+        w="40 + (event_id * 17) % 260",
+        h="64",
+        labels=ADAPTER_LABELS,
+    ),
+}
 
-
-def synth_blocks_dual_depth1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-column family + the dual-source (E2) columns: the
-    synth_blocks_depth1 geometry (exactly ONE provable depth-0 vertical
-    cut, then cut-free columns) with the _with_dual_columns OCR
-    corruption and C7 layer rects.
-
-    Degeneracy arguments, all SUBSET-STABLE (they survive the dual
-    DAG's conf>0.3 + arb-kind + CJK filters because each is an
-    all-pairs property of the full family):
-
-      * same-page blocks are y-disjoint (pitch 125, heights <= 99), so
-        the overlap merge is the identity and each detection's flipped
-        bbox intersects exactly its OWN layer rect — the gather
-        provably returns the row's own text (same as dual_simple);
-      * the column argument of synth_blocks_depth1 (left x in
-        [100,308), right in [400,608), >= 92px gap, within-column
-        all-pairs x-overlap) holds for EVERY subset of blocks, so the
-        xy-cut admits exactly one depth-0 cut when both columns are
-        inhabited and degenerates to the same (column, y1) order when
-        one is empty;
-      * arbitration and CJK filters are directly SQL-expressible
-        (DUAL_SIMPLE_SQL's picked/emitted stages).
-
-    So the driver hash-checks the dual pipeline's cut SELECTION +
-    recursive descent + arbitration + CJK filters in one query
-    (registry.DUAL_DEPTH1_SQL) — the slice q_dual_simple's cut-free
-    family could not pin."""
-    return _with_dual_columns(synth_blocks_depth1(spark, sf_dir))
-
-
-def synth_blocks_dual_threecol(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three-column family + the dual-source (E2) columns: the
-    synth_blocks_threecol geometry (exactly TWO provable depth-0 cuts
-    — the nseg>2 multi-segment path) with the _with_dual_columns
-    decoration.  All of synth_blocks_dual_depth1's subset-stability
-    arguments apply unchanged (same 125-pitch y-stacking, same
-    all-pairs column structure per gap), so the dual DAG's candidate
-    dedup across gaps, bisect assignment over multiple cuts, and
-    reversed 3-child push are hash-checked via registry.
-    DUAL_THREECOL_SQL — reading order provably (page, column, y1)."""
-    return _with_dual_columns(synth_blocks_threecol(spark, sf_dir))
-
-
-def synth_blocks_dual_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Margin-decay family + the dual-source (E2) columns: the
-    synth_blocks_decay geometry (a depth-3 cut that fires ONLY because
-    the xy-cut margin decays; a constant-margin mutant falls to the
-    x-major grid sort and emits the B/C pair in the OPPOSITE order)
-    with the _with_dual_columns decoration.
-
-    Subset-stability is already proven for this family for ARBITRARY
-    subsets (synth_blocks_decay docstring: "stays (column, y1) under
-    any conf-filter subset" — removing F creates no in-column depth-0
-    cut, removing B or C leaves singletons), which covers the dual
-    DAG's conf + arb-kind + CJK filtering exactly.  Same-column blocks
-    are y-disjoint and cross-column blocks x-disjoint, so the overlap
-    merge stays the identity and each detection's flipped bbox gathers
-    exactly its own layer text.  So the margin-decay SCHEDULE itself
-    is hash-pinned under the dual kernel (registry.DUAL_DECAY_SQL):
-    losing the decay would flip B/C emission order doc-wide."""
-    return _with_dual_columns(synth_blocks_decay(spark, sf_dir))
-
-
-SYNTH_SIMPLE_SQL = """
-WITH base AS (
-  SELECT
-    'simdoc-' || lpad(CAST(user_id % 200 AS VARCHAR), 5, '0') AS doc_id,
-    CAST(event_id % 3 AS INT) AS page,
-    event_id,
-    CAST(100 + (event_id * 7) % 50 AS DOUBLE) AS x1,
-    CAST(300 + (event_id * 11) % 100 AS DOUBLE) AS w,
-    CAST(20 + (event_id * 23) % 80 AS DOUBLE) AS h,
-    ((event_id * 7) % 100) / 100.0 AS conf,
-    (['text','Text','title','figure','figure_caption','table','header',
-      'footer','reference','equation','TOC','list','icon',
-      'qrcode','textwithequation','blob','caption'])[
-        CAST((event_id * 13) % 17 + 1 AS INT)] AS label,
-    event_type
-  FROM events
-), stacked AS (
-  SELECT *,
-    CAST((row_number() OVER (PARTITION BY doc_id, page ORDER BY event_id)
-          - 1) * 125 AS DOUBLE) AS y1
-  FROM base
-)
-SELECT
-  doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY event_id) - 1 AS INT)
-    AS "offset",
-  x1, y1, x1 + w AS x2, y1 + h AS y2, conf, label,
-  CASE WHEN label IN ('figure','icon','qrcode') THEN NULL
-       ELSE event_type || ' ' || CAST(event_id AS VARCHAR) END AS text,
-  CASE WHEN label IN ('figure','icon','qrcode')
-       THEN 'media://' || CAST(event_id AS VARCHAR)
-       ELSE NULL END AS media_ref
-FROM stacked
+# The dual-source (E2) columns over a KERNEL_COLS frame ``{blocks}``: a
+# deterministic OCR corruption (offset%4: reversed, else a<->e swapped
+# — both arbitration branches fire) and the text-layer rect as the
+# exact C7 image of the bbox (rs=2, H=550; matches q_dual_arbitrate).
+DUAL_COLUMNS_SQL = """
+SELECT *,
+  CASE WHEN b.offset % 4 = 0 THEN reverse(text)
+       ELSE translate(text, 'ae', 'ea') END AS ocr_text,
+  x1 / 2 AS lx1, 550 - y2 / 2 AS ly1, x2 / 2 AS lx2, 550 - y1 / 2 AS ly2
+FROM {blocks} AS b
 """
 
 
-def synth_blocks_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conflict-free mixed text+equation family (KERNEL_COLS shape).
-
-    One box per 80px line band per (doc_id, page): y1 = band * 80
-    exactly, so the mix kernel's band snap is the identity and every
-    box sits alone on its row.  On this family every data-dependent
-    branch of the interleave provably no-ops:
-
-      * ``merge_same_row`` sees no same-row pair -> identity;
-      * ``split_conflict`` sees no text/latex row conflict -> no
-        truncate/split/re-enqueue;
-      * the re-recognition gather returns each text box's own content
-        (no other box shares its row);
-      * the ``\\tag`` splice needs an isolated formula and a text box
-        on ONE row -> never fires;
-      * contents carry no ``$``/backslash/brace, so to_katex and
-        normalize_inline reduce to space-collapse + trim.
-
-    What remains — classify, conf filter, kind routing, $/$$ wrapping,
-    row-major assembly, final strip — is ANSI-SQL, so the REAL kernel
-    (registry.q_mix_simple runs compose_mixed_page unchanged) is
-    hash-checked end-to-end on this slice; the general corpus stays
-    rows-only (q_mix_interleave, pinned by tests/test_mixkernel.py).
-    Mirrored in SYNTH_MIX_SQL.
-    """
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    labels_arr = F.array(*[F.lit(s) for s in ADAPTER_LABELS])
-    base = ev.select(
-        F.concat(
-            F.lit("mixdoc-"), F.lpad((F.col("user_id") % 200).cast("string"), 5, "0")
-        ).alias("doc_id"),
-        (F.col("event_id") % 3).cast("int").alias("page"),
-        F.col("event_id"),
-        ((F.col("event_id") * 131) % 700).cast("double").alias("x1"),
-        (40 + (F.col("event_id") * 17) % 260).cast("double").alias("w"),
-        (((F.col("event_id") * 7) % 100) / 100.0).alias("conf"),
-        F.element_at(labels_arr, ((F.col("event_id") * 13) % 18 + 1).cast("int")).alias(
-            "label"
-        ),
-        F.col("event_type"),
-    )
-    from pyspark.sql import Window
-
-    wp = Window.partitionBy("doc_id", "page").orderBy("event_id")
-    banded = base.select(
-        "doc_id", "page", "event_id", "x1", "w", "conf", "label", "event_type",
-        ((F.row_number().over(wp) - 1) * 80).cast("double").alias("y1"),
-    )
-    wd = Window.partitionBy("doc_id").orderBy("event_id")
-    return banded.select(
-        "doc_id",
-        "page",
-        (F.row_number().over(wd) - 1).cast("int").alias("offset"),
-        "x1",
-        "y1",
-        (F.col("x1") + F.col("w")).alias("x2"),
-        (F.col("y1") + 64).alias("y2"),
-        "conf",
-        "label",
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS), F.lit(None).cast("string")
-        )
-        .otherwise(F.concat("event_type", F.lit(" "), F.col("event_id").cast("string")))
-        .alias("text"),
-        F.when(
-            F.col("label").isin(*MEDIA_LABELS),
-            F.concat(F.lit("media://"), F.col("event_id").cast("string")),
-        )
-        .otherwise(F.lit(None).cast("string"))
-        .alias("media_ref"),
-    )
+def synth_blocks(
+    spark: SparkSession, sf_dir: str, family: str = "events"
+) -> DataFrame:
+    """events.parquet -> the ``family`` frame (KERNEL_COLS shape)."""
+    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return spark.sql(FAMILY_SQL[family], events=events)
 
 
-SYNTH_MIX_SQL = """
-WITH mixbase AS (
-  SELECT
-    'mixdoc-' || lpad(CAST(user_id % 200 AS VARCHAR), 5, '0') AS doc_id,
-    CAST(event_id % 3 AS INT) AS page,
-    event_id,
-    CAST((event_id * 131) % 700 AS DOUBLE) AS x1,
-    CAST(40 + (event_id * 17) % 260 AS DOUBLE) AS w,
-    ((event_id * 7) % 100) / 100.0 AS conf,
-    (['text','Text','title','figure','figure_caption','table','header',
-      'footer','reference','equation','embedeq','TOC','list','icon',
-      'qrcode','textwithequation','blob','caption'])[
-        CAST((event_id * 13) % 18 + 1 AS INT)] AS label,
-    event_type
-  FROM events
-), mixbanded AS (
-  SELECT *,
-    CAST((row_number() OVER (PARTITION BY doc_id, page ORDER BY event_id)
-          - 1) * 80 AS DOUBLE) AS y1
-  FROM mixbase
-)
-SELECT
-  doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY event_id) - 1 AS INT)
-    AS "offset",
-  x1, y1, x1 + w AS x2, y1 + 64 AS y2, conf, label,
-  CASE WHEN label IN ('figure','icon','qrcode') THEN NULL
-       ELSE event_type || ' ' || CAST(event_id AS VARCHAR) END AS text,
-  CASE WHEN label IN ('figure','icon','qrcode')
-       THEN 'media://' || CAST(event_id AS VARCHAR)
-       ELSE NULL END AS media_ref
-FROM mixbanded
-"""
+def with_dual_columns(b: DataFrame) -> DataFrame:
+    """``b`` plus the dual-source (E2) columns (DUAL_COLUMNS_SQL)."""
+    return b.sparkSession.sql(DUAL_COLUMNS_SQL, blocks=b)
 
 
 def synth_blocks_mix_trunc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -965,36 +480,3 @@ concat(
         F.lit(-1).cast("long").alias("token_num"),
     )
     return tokens.unionByName(structs)
-
-
-# DuckDB mirror of synth_blocks (same arithmetic, same column names).
-SYNTH_BLOCKS_SQL = """
-WITH base AS (
-  SELECT
-    'evdoc-' || lpad(CAST(user_id % 200 AS VARCHAR), 5, '0') AS doc_id,
-    CAST(event_id % 3 AS INT) AS page,
-    event_id,
-    CAST((event_id * 131) % 700 AS DOUBLE) AS x1,
-    CAST((event_id * 197) % 900 AS DOUBLE) AS y1,
-    CAST(40 + (event_id * 17) % 260 AS DOUBLE) AS w,
-    CAST(20 + (event_id * 23) % 80 AS DOUBLE) AS h,
-    ((event_id * 7) % 100) / 100.0 AS conf,
-    (['text','Text','title','figure','figure_caption','table','header',
-      'footer','reference','equation','embedeq','TOC','list','icon',
-      'qrcode','textwithequation','blob','caption'])[
-        CAST((event_id * 13) % 18 + 1 AS INT)] AS label,
-    event_type
-  FROM events
-)
-SELECT
-  doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY event_id) - 1 AS INT)
-    AS "offset",
-  x1, y1, x1 + w AS x2, y1 + h AS y2, conf, label,
-  CASE WHEN label IN ('figure','icon','qrcode') THEN NULL
-       ELSE event_type || ' ' || CAST(event_id AS VARCHAR) END AS text,
-  CASE WHEN label IN ('figure','icon','qrcode')
-       THEN 'media://' || CAST(event_id AS VARCHAR)
-       ELSE NULL END AS media_ref
-FROM base
-"""

@@ -12,8 +12,9 @@ Cross-engine determinism rules used throughout (floats hash-compared):
   always carry a unique tiebreak column.
 
 The synthetic geometry corpus used by the extraction-analog queries is
-derived from ``events`` with integer arithmetic mirrored exactly in
-SQL (pipeline/adapter.py: synth_blocks <-> SYNTH_BLOCKS_SQL).
+derived from ``events`` with integer arithmetic: each geometry family
+is one SQL text (pipeline/adapter.py FAMILY_SQL) that ``synth_blocks``
+runs on Spark and the oracles here embed verbatim.
 """
 
 from __future__ import annotations
@@ -26,13 +27,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..pipeline.adapter import (
-    SYNTH_BLOCKS_SQL,
-    SYNTH_DECAY_SQL,
-    SYNTH_DEPTH1_SQL,
-    SYNTH_MIX_SQL,
-    SYNTH_SIMPLE_SQL,
-    SYNTH_THREECOL_SQL,
+    DUAL_COLUMNS_SQL,
+    FAMILY_SQL,
     synth_blocks,
+    with_dual_columns,
 )
 
 # -- helpers ---------------------------------------------------------------
@@ -113,8 +111,13 @@ CLASSIFY_SQL_CASE = """
 """
 
 
+def _family(name: str) -> str:
+    """A synth family's SQL text over the oracle's ``events`` view."""
+    return FAMILY_SQL[name].format(events="events")
+
+
 def _blocks_cte() -> str:
-    return f"WITH blocks AS (\n{SYNTH_BLOCKS_SQL}\n)"
+    return f"WITH blocks AS (\n{_family('events')}\n)"
 
 
 def _pair_explode_expr(
@@ -3855,8 +3858,6 @@ def q_mix_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas kernel over the events-derived corpus.  Rows-only
     check: the heap split/truncate sweep is data-dependent; Spark-vs-
     local equality is pinned by tests/test_mixkernel.py."""
-    from ..pipeline.adapter import synth_blocks
-
     return _mix_markdown(synth_blocks(spark, sf_dir), spark)
 
 
@@ -3866,14 +3867,12 @@ def q_mix_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep, split/truncate, re-recognition gather, to_katex, $/$$
     wrapping, \\tag splice, row-major assembly) runs over a family
     whose geometry provably no-ops every data-dependent branch (one
-    box per 80px line band; see adapter.synth_blocks_mix).  On that
+    box per 80px line band; see adapter.FAMILY_SQL["mix"]).  On that
     slice the composition reduces to classify -> conf filter -> wrap
     -> ordered string_agg -> trim, which DuckDB hash-checks — so the
     driver verifies the mixed-OCR DAG end to end while the general
     corpus stays rows-only."""
-    from ..pipeline.adapter import synth_blocks_mix
-
-    return _mix_markdown(synth_blocks_mix(spark, sf_dir), spark)
+    return _mix_markdown(synth_blocks(spark, sf_dir, "mix"), spark)
 
 
 # Text kinds (blocktypes.TEXT_KINDS) in CLASSIFY_SQL_CASE's naming;
@@ -3885,7 +3884,7 @@ _MIX_TEXT_KINDS_SQL = (
 
 MIX_SIMPLE_SQL = f"""
 WITH blocks AS (
-{SYNTH_MIX_SQL}
+{_family("mix")}
 ), k AS (
   SELECT doc_id, page, y1, text, {CLASSIFY_SQL_CASE} AS kind
   FROM blocks WHERE conf > 0.3
@@ -3960,6 +3959,19 @@ FROM seg GROUP BY doc_id, page
 """
 
 
+def _dual_extract(spark: SparkSession, sf_dir: str, family: str) -> DataFrame:
+    """The dual DAG over ``family`` plus its dual columns; page height
+    550 is the H of DUAL_COLUMNS_SQL's C7 layer rects."""
+    from dataclasses import replace
+
+    from ..core.document import DEFAULT_CONFIG
+    from ..pipeline.extract import extract_spans_flat
+
+    cfg = replace(DEFAULT_CONFIG, page_height=550.0)
+    blocks = with_dual_columns(synth_blocks(spark, sf_dir, family))
+    return extract_spans_flat(blocks, cfg, dual=True)
+
+
 def q_dual_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full dual-source (E2) extraction DAG over the events-derived
     corpus: merge -> C7 flip -> gather -> levenshtein arbitration ->
@@ -3967,14 +3979,7 @@ def q_dual_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     xy-cut recursion isn't ANSI-SQL; the SQL-checkable arbitration
     slice is q_dual_arbitrate, and byte-exact goldens live in
     tests/test_dual_and_presets.py."""
-    from dataclasses import replace
-
-    from ..core.document import DEFAULT_CONFIG
-    from ..pipeline.adapter import synth_blocks_dual
-    from ..pipeline.extract import extract_spans_flat
-
-    cfg = replace(DEFAULT_CONFIG, page_height=550.0)
-    return extract_spans_flat(synth_blocks_dual(spark, sf_dir), cfg, dual=True)
+    return _dual_extract(spark, sf_dir, "events")
 
 
 def q_dual_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3985,8 +3990,8 @@ def q_dual_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
     over a family where every data-dependent stage provably
     degenerates:
 
-      * synth_blocks_simple geometry: zero pair intersections (merge =
-        identity), all-pairs x-overlap + >=26px y-gaps (xy-cut ==
+      * the cut-free "simple" geometry: zero pair intersections (merge
+        = identity), all-pairs x-overlap + >=26px y-gaps (xy-cut ==
         ascending-y sort);
       * layer rects are the exact C7 image of each bbox and pages are
         y-disjoint, so the gather returns exactly the row's own text;
@@ -3996,106 +4001,83 @@ def q_dual_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
     So the driver hash-checks the dual pipeline END TO END here —
     including the doc-wide order — while the general dual corpus
     (q_dual_extract) stays rows-only under its golden suite."""
-    from dataclasses import replace
-
-    from ..core.document import DEFAULT_CONFIG
-    from ..pipeline.adapter import synth_blocks_dual_simple
-    from ..pipeline.extract import extract_spans_flat
-
-    cfg = replace(DEFAULT_CONFIG, page_height=550.0)
-    return extract_spans_flat(
-        synth_blocks_dual_simple(spark, sf_dir), cfg, dual=True
-    )
+    return _dual_extract(spark, sf_dir, "simple")
 
 
 def q_dual_depth1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL oracle for the DUAL DAG's xy-cut FIRST BRANCH (VERDICT r4
     #5): the REAL dual kernel (conf filter -> classify -> overlap merge
     -> C7 flip -> gather -> levenshtein arbitration -> CJK filters ->
-    xy-cut -> emit, pdf2txt.py:52-100) runs over the two-column dual
-    family (adapter.synth_blocks_dual_depth1) whose geometry admits
-    exactly ONE depth-0 vertical cut and whose degeneracy arguments
-    are subset-stable under the dual filters — so cut SELECTION + one
+    xy-cut -> emit, pdf2txt.py:52-100) runs over the two-column family
+    (adapter.FAMILY_SQL["depth1"]) whose geometry admits exactly ONE
+    depth-0 vertical cut and whose degeneracy arguments are
+    subset-stable under the dual filters — so cut SELECTION + one
     recursive descent + arbitration + CJK filters are hash-checked
     cross-engine in one query.  q_dual_simple pinned only the cut-free
     base case; the general dual corpus (q_dual_extract) stays
     rows-only under its golden suite.  Reading order on this family is
     provably (page, column, y1), left column first."""
-    from dataclasses import replace
-
-    from ..core.document import DEFAULT_CONFIG
-    from ..pipeline.adapter import synth_blocks_dual_depth1
-    from ..pipeline.extract import extract_spans_flat
-
-    cfg = replace(DEFAULT_CONFIG, page_height=550.0)
-    return extract_spans_flat(
-        synth_blocks_dual_depth1(spark, sf_dir), cfg, dual=True
-    )
+    return _dual_extract(spark, sf_dir, "depth1")
 
 
 def q_dual_threecol(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL oracle for the DUAL DAG's MULTI-cut xy-cut path: the REAL
-    dual kernel runs over the three-column dual family
-    (adapter.synth_blocks_dual_threecol) whose depth-0 sweep admits
+    dual kernel runs over the three-column family
+    (adapter.FAMILY_SQL["threecol"]) whose depth-0 sweep admits
     exactly TWO valid cuts — pinning candidate dedup per gap, bisect
     assignment over multiple cuts, and the reversed push of 3 children
     for the dual pipeline (q_dual_depth1 pins only nseg=2), composed
     with arbitration + CJK filters.  Completes the dual family's
     parity with the flagship simple/depth1/threecol ladder."""
-    from dataclasses import replace
-
-    from ..core.document import DEFAULT_CONFIG
-    from ..pipeline.adapter import synth_blocks_dual_threecol
-    from ..pipeline.extract import extract_spans_flat
-
-    cfg = replace(DEFAULT_CONFIG, page_height=550.0)
-    return extract_spans_flat(
-        synth_blocks_dual_threecol(spark, sf_dir), cfg, dual=True
-    )
+    return _dual_extract(spark, sf_dir, "threecol")
 
 
 def q_dual_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL oracle for the margin-DECAY schedule under the DUAL kernel:
-    the REAL dual DAG runs over the decay dual family
-    (adapter.synth_blocks_dual_decay) whose B/C pairs are separated by
+    the REAL dual DAG runs over the decay family
+    (adapter.FAMILY_SQL["decay"]) whose B/C pairs are separated by
     an 8px y-gap that only the depth-3 DECAYED margin (10 -> 10 ->
     8.75 -> 6.5625) admits — a constant-margin kernel would fall to
     the x-major grid sort and emit C before B, flipping the doc-wide
     hash.  flagship_decay pins the schedule for the flagship emission;
     this pins it composed with C7 flip + gather + arbitration + CJK
     filters.  Order provably (page, column, y1) for any surviving
-    subset (decay-family docstring's subset argument)."""
-    from dataclasses import replace
+    subset (the decay family's subset argument)."""
+    return _dual_extract(spark, sf_dir, "decay")
 
-    from ..core.document import DEFAULT_CONFIG
-    from ..pipeline.adapter import synth_blocks_dual_decay
-    from ..pipeline.extract import extract_spans_flat
 
-    cfg = replace(DEFAULT_CONFIG, page_height=550.0)
-    return extract_spans_flat(
-        synth_blocks_dual_decay(spark, sf_dir), cfg, dual=True
-    )
-
+# Reading-order column key of each xy-cut family (adapter.FAMILY_SQL
+# proves the order): the kernel emits every page in (column, y1) order.
+_COLUMN_KEY = {
+    "simple": "0",
+    "depth1": "CASE WHEN x1 < 350 THEN 0 ELSE 1 END",
+    "threecol": "CASE WHEN x1 < 350 THEN 0 WHEN x1 < 650 THEN 1 ELSE 2 END",
+    "decay": "CASE WHEN x1 < 350 THEN 0 ELSE 1 END",
+}
 
 _ARB_SET_SQL = "('text','title','caption')"
 
-DUAL_DEPTH1_SQL = f"""
+
+def _dual_sql(family: str) -> str:
+    """DuckDB oracle of the whole dual DAG over an xy-cut family and its
+    dual columns: arbitration and the CJK filters in SQL, reading order
+    (page, column, y1)."""
+    blocks = DUAL_COLUMNS_SQL.format(blocks=f"({_family(family)})")
+    return f"""
 WITH blocks AS (
-{SYNTH_DEPTH1_SQL}
+{blocks}
 ), k AS (
   SELECT *, {CLASSIFY_SQL_CASE} AS kind FROM blocks
 ), layer AS (
   SELECT doc_id, page, "offset" AS l_offset, text AS l_text,
-    x1 / 2.0 AS lx1, 550.0 - y2 / 2.0 AS ly1,
-    x2 / 2.0 AS lx2, 550.0 - y1 / 2.0 AS ly2
+    lx1, ly1, lx2, ly2
   FROM k WHERE text IS NOT NULL
 ), dets AS (
   SELECT doc_id, page, "offset", y1 AS dy1, kind,
-    CASE WHEN x1 < 350 THEN 0 ELSE 1 END AS col,
+    {_COLUMN_KEY[family]} AS col,
     x1 / 2.0 AS qx1, 550.0 - y2 / 2.0 AS qy1,
     x2 / 2.0 AS qx2, 550.0 - y1 / 2.0 AS qy2,
-    CASE WHEN "offset" % 4 = 0 THEN reverse(text)
-         ELSE translate(text, 'ae', 'ea') END AS ocr
+    ocr_text AS ocr
   FROM k WHERE conf > 0.3 AND kind IN {_ARB_SET_SQL}
 ), pairs AS (
   SELECT d.doc_id, d.page, d."offset", l.l_offset, l.l_text
@@ -4133,166 +4115,11 @@ SELECT doc_id,
 FROM emitted
 """
 
-DUAL_THREECOL_SQL = f"""
-WITH blocks AS (
-{SYNTH_THREECOL_SQL}
-), k AS (
-  SELECT *, {CLASSIFY_SQL_CASE} AS kind FROM blocks
-), layer AS (
-  SELECT doc_id, page, "offset" AS l_offset, text AS l_text,
-    x1 / 2.0 AS lx1, 550.0 - y2 / 2.0 AS ly1,
-    x2 / 2.0 AS lx2, 550.0 - y1 / 2.0 AS ly2
-  FROM k WHERE text IS NOT NULL
-), dets AS (
-  SELECT doc_id, page, "offset", y1 AS dy1, kind,
-    CASE WHEN x1 < 350 THEN 0 WHEN x1 < 650 THEN 1 ELSE 2 END AS col,
-    x1 / 2.0 AS qx1, 550.0 - y2 / 2.0 AS qy1,
-    x2 / 2.0 AS qx2, 550.0 - y1 / 2.0 AS qy2,
-    CASE WHEN "offset" % 4 = 0 THEN reverse(text)
-         ELSE translate(text, 'ae', 'ea') END AS ocr
-  FROM k WHERE conf > 0.3 AND kind IN {_ARB_SET_SQL}
-), pairs AS (
-  SELECT d.doc_id, d.page, d."offset", l.l_offset, l.l_text
-  FROM dets d JOIN layer l ON d.doc_id = l.doc_id AND d.page = l.page
-  WHERE greatest(least(d.qx2, l.lx2) - greatest(d.qx1, l.lx1), 0)
-      * greatest(least(d.qy2, l.ly2) - greatest(d.qy1, l.ly1), 0)
-      > 0.5 * least((d.qx2-d.qx1)*(d.qy2-d.qy1), (l.lx2-l.lx1)*(l.ly2-l.ly1))
-    AND least((d.qx2-d.qx1)*(d.qy2-d.qy1), (l.lx2-l.lx1)*(l.ly2-l.ly1)) > 0
-), gathered AS (
-  SELECT doc_id, page, "offset",
-    string_agg(replace(l_text, chr(10), ''), '' ORDER BY l_offset)
-      AS pdf_text
-  FROM pairs GROUP BY doc_id, page, "offset"
-), arb AS (
-  SELECT d.doc_id, d.page, d.dy1, d.col, d.kind, d.ocr,
-    COALESCE(g.pdf_text, '') AS pdf_text
-  FROM dets d LEFT JOIN gathered g
-    ON d.doc_id = g.doc_id AND d.page = g.page AND d."offset" = g."offset"
-), picked AS (
-  SELECT doc_id, page, dy1, col, kind,
-    CASE WHEN levenshtein(ocr, pdf_text) * 1.0
-              / greatest(length(ocr), length(pdf_text), 1) < 0.2
-         THEN pdf_text ELSE ocr END AS text
-  FROM arb
-), emitted AS (
-  SELECT * FROM picked
-  WHERE NOT (text LIKE '图%' OR text LIKE '表%')
-    AND NOT (length(text) < 256
-             AND (text LIKE '%见表%' OR text LIKE '%见图%'))
-)
-SELECT doc_id,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY page, col, dy1) - 1
-       AS INT) AS "order",
-  kind, text, CAST(NULL AS VARCHAR) AS media_ref
-FROM emitted
-"""
 
-DUAL_DECAY_SQL = f"""
-WITH blocks AS (
-{SYNTH_DECAY_SQL}
-), k AS (
-  SELECT *, {CLASSIFY_SQL_CASE} AS kind FROM blocks
-), layer AS (
-  SELECT doc_id, page, "offset" AS l_offset, text AS l_text,
-    x1 / 2.0 AS lx1, 550.0 - y2 / 2.0 AS ly1,
-    x2 / 2.0 AS lx2, 550.0 - y1 / 2.0 AS ly2
-  FROM k WHERE text IS NOT NULL
-), dets AS (
-  SELECT doc_id, page, "offset", y1 AS dy1, kind,
-    CASE WHEN x1 < 350 THEN 0 ELSE 1 END AS col,
-    x1 / 2.0 AS qx1, 550.0 - y2 / 2.0 AS qy1,
-    x2 / 2.0 AS qx2, 550.0 - y1 / 2.0 AS qy2,
-    CASE WHEN "offset" % 4 = 0 THEN reverse(text)
-         ELSE translate(text, 'ae', 'ea') END AS ocr
-  FROM k WHERE conf > 0.3 AND kind IN {_ARB_SET_SQL}
-), pairs AS (
-  SELECT d.doc_id, d.page, d."offset", l.l_offset, l.l_text
-  FROM dets d JOIN layer l ON d.doc_id = l.doc_id AND d.page = l.page
-  WHERE greatest(least(d.qx2, l.lx2) - greatest(d.qx1, l.lx1), 0)
-      * greatest(least(d.qy2, l.ly2) - greatest(d.qy1, l.ly1), 0)
-      > 0.5 * least((d.qx2-d.qx1)*(d.qy2-d.qy1), (l.lx2-l.lx1)*(l.ly2-l.ly1))
-    AND least((d.qx2-d.qx1)*(d.qy2-d.qy1), (l.lx2-l.lx1)*(l.ly2-l.ly1)) > 0
-), gathered AS (
-  SELECT doc_id, page, "offset",
-    string_agg(replace(l_text, chr(10), ''), '' ORDER BY l_offset)
-      AS pdf_text
-  FROM pairs GROUP BY doc_id, page, "offset"
-), arb AS (
-  SELECT d.doc_id, d.page, d.dy1, d.col, d.kind, d.ocr,
-    COALESCE(g.pdf_text, '') AS pdf_text
-  FROM dets d LEFT JOIN gathered g
-    ON d.doc_id = g.doc_id AND d.page = g.page AND d."offset" = g."offset"
-), picked AS (
-  SELECT doc_id, page, dy1, col, kind,
-    CASE WHEN levenshtein(ocr, pdf_text) * 1.0
-              / greatest(length(ocr), length(pdf_text), 1) < 0.2
-         THEN pdf_text ELSE ocr END AS text
-  FROM arb
-), emitted AS (
-  SELECT * FROM picked
-  WHERE NOT (text LIKE '图%' OR text LIKE '表%')
-    AND NOT (length(text) < 256
-             AND (text LIKE '%见表%' OR text LIKE '%见图%'))
-)
-SELECT doc_id,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY page, col, dy1) - 1
-       AS INT) AS "order",
-  kind, text, CAST(NULL AS VARCHAR) AS media_ref
-FROM emitted
-"""
-
-DUAL_SIMPLE_SQL = f"""
-WITH blocks AS (
-{SYNTH_SIMPLE_SQL}
-), k AS (
-  SELECT *, {CLASSIFY_SQL_CASE} AS kind FROM blocks
-), layer AS (
-  SELECT doc_id, page, "offset" AS l_offset, text AS l_text,
-    x1 / 2.0 AS lx1, 550.0 - y2 / 2.0 AS ly1,
-    x2 / 2.0 AS lx2, 550.0 - y1 / 2.0 AS ly2
-  FROM k WHERE text IS NOT NULL
-), dets AS (
-  SELECT doc_id, page, "offset", y1 AS dy1, kind,
-    x1 / 2.0 AS qx1, 550.0 - y2 / 2.0 AS qy1,
-    x2 / 2.0 AS qx2, 550.0 - y1 / 2.0 AS qy2,
-    CASE WHEN "offset" % 4 = 0 THEN reverse(text)
-         ELSE translate(text, 'ae', 'ea') END AS ocr
-  FROM k WHERE conf > 0.3 AND kind IN {_ARB_SET_SQL}
-), pairs AS (
-  SELECT d.doc_id, d.page, d."offset", l.l_offset, l.l_text
-  FROM dets d JOIN layer l ON d.doc_id = l.doc_id AND d.page = l.page
-  WHERE greatest(least(d.qx2, l.lx2) - greatest(d.qx1, l.lx1), 0)
-      * greatest(least(d.qy2, l.ly2) - greatest(d.qy1, l.ly1), 0)
-      > 0.5 * least((d.qx2-d.qx1)*(d.qy2-d.qy1), (l.lx2-l.lx1)*(l.ly2-l.ly1))
-    AND least((d.qx2-d.qx1)*(d.qy2-d.qy1), (l.lx2-l.lx1)*(l.ly2-l.ly1)) > 0
-), gathered AS (
-  SELECT doc_id, page, "offset",
-    string_agg(replace(l_text, chr(10), ''), '' ORDER BY l_offset)
-      AS pdf_text
-  FROM pairs GROUP BY doc_id, page, "offset"
-), arb AS (
-  SELECT d.doc_id, d.page, d.dy1, d.kind, d.ocr,
-    COALESCE(g.pdf_text, '') AS pdf_text
-  FROM dets d LEFT JOIN gathered g
-    ON d.doc_id = g.doc_id AND d.page = g.page AND d."offset" = g."offset"
-), picked AS (
-  SELECT doc_id, page, dy1, kind,
-    CASE WHEN levenshtein(ocr, pdf_text) * 1.0
-              / greatest(length(ocr), length(pdf_text), 1) < 0.2
-         THEN pdf_text ELSE ocr END AS text
-  FROM arb
-), emitted AS (
-  SELECT * FROM picked
-  WHERE NOT (text LIKE '图%' OR text LIKE '表%')
-    AND NOT (length(text) < 256
-             AND (text LIKE '%见表%' OR text LIKE '%见图%'))
-)
-SELECT doc_id,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY page, dy1) - 1 AS INT)
-    AS "order",
-  kind, text, CAST(NULL AS VARCHAR) AS media_ref
-FROM emitted
-"""
+DUAL_SIMPLE_SQL = _dual_sql("simple")
+DUAL_DEPTH1_SQL = _dual_sql("depth1")
+DUAL_THREECOL_SQL = _dual_sql("threecol")
+DUAL_DECAY_SQL = _dual_sql("decay")
 
 
 def q_flagship_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4300,198 +4127,68 @@ def q_flagship_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
     REAL page kernel (classify -> merge sweep -> containment -> gather
     -> xy-cut recursion -> emission) runs over a corpus family whose
     geometry provably collapses the recursion to an ascending-y sort
-    (synth_blocks_simple: all-pairs x-overlap kills depth-0 cuts,
-    >=26px y-gaps make every depth-1 cut isolate one block, no embedeq,
-    zero pair intersections).  On this family the whole DAG is
+    (adapter.FAMILY_SQL["simple"]: all-pairs x-overlap kills depth-0
+    cuts, >=26px y-gaps make every depth-1 cut isolate one block, no
+    embedeq, zero pair intersections).  On this family the whole DAG is
     SQL-expressible, so the driver hash-checks extraction END TO END —
     the general corpus stays rows-only (goldens cover it)."""
-    from ..pipeline.adapter import synth_blocks_simple
     from ..pipeline.extract import extract_pages
 
-    return extract_pages(synth_blocks_simple(spark, sf_dir))
-
-
-_MEDIA_SET_SQL = "('figure','icon','qrcode','barcode')"
-
-FLAGSHIP_SIMPLE_SQL = f"""
-WITH blocks AS (
-{SYNTH_SIMPLE_SQL}
-), k AS (
-  SELECT *, {CLASSIFY_SQL_CASE} AS kind FROM blocks WHERE conf > 0.3
-), layer AS (
-  SELECT doc_id, page, "offset", text, x1, y1, x2, y2,
-         (x2 - x1) * (y2 - y1) AS area
-  FROM blocks WHERE text IS NOT NULL
-), gathered AS (
-  SELECT d.doc_id, d.page, d."offset",
-    string_agg(l.text, '' ORDER BY l."offset") AS gtext
-  FROM k d JOIN layer l ON d.doc_id = l.doc_id AND d.page = l.page
-  WHERE d.kind IN {_TEXT_SET_SQL}
-    AND greatest(least(d.x2, l.x2) - greatest(d.x1, l.x1), 0)
-      * greatest(least(d.y2, l.y2) - greatest(d.y1, l.y1), 0)
-      > 0.5 * least(l.area, (d.x2 - d.x1) * (d.y2 - d.y1))
-    AND least(l.area, (d.x2 - d.x1) * (d.y2 - d.y1)) > 0
-  GROUP BY d.doc_id, d.page, d."offset"
-), emitted AS (
-  SELECT k.doc_id, k.page, k.y1, k.kind,
-    CASE
-      WHEN k.kind IN {_MEDIA_SET_SQL} THEN NULL
-      WHEN k.kind = 'equation' THEN e'\\n$$\\n' || k.text || e'\\n$$\\n'
-      WHEN k.kind = 'table' THEN k.text
-      ELSE COALESCE(g.gtext, '')
-    END AS text,
-    CASE WHEN k.kind IN {_MEDIA_SET_SQL} THEN k.media_ref END AS media_ref
-  FROM k LEFT JOIN gathered g
-    ON k.doc_id = g.doc_id AND k.page = g.page AND k."offset" = g."offset"
-  WHERE k.kind IN {_MEDIA_SET_SQL}
-     OR (k.kind = 'equation' AND k.text IS NOT NULL)
-     OR (k.kind = 'table' AND k.text IS NOT NULL)
-     OR k.kind IN {_TEXT_SET_SQL}
-)
-SELECT doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id, page ORDER BY y1) - 1 AS INT)
-    AS page_pos,
-  kind, text, media_ref
-FROM emitted
-"""
+    return extract_pages(synth_blocks(spark, sf_dir, "simple"))
 
 
 def q_flagship_depth1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL oracle for the xy-cut recursion's FIRST BRANCH (VERDICT r2
     #5): the REAL page kernel runs over the two-column family
-    (synth_blocks_depth1) whose geometry admits exactly ONE depth-0
-    vertical cut, then degenerates — so cut SELECTION plus one
+    (adapter.FAMILY_SQL["depth1"]) whose geometry admits exactly ONE
+    depth-0 vertical cut, then degenerates — so cut SELECTION plus one
     recursive descent is hash-checked cross-engine (flagship_simple
     only pinned the cut-free base case).  Reading order on this family
     is provably (column, y1), left column first."""
-    from ..pipeline.adapter import synth_blocks_depth1
     from ..pipeline.extract import extract_pages
 
-    return extract_pages(synth_blocks_depth1(spark, sf_dir))
-
-
-FLAGSHIP_DEPTH1_SQL = f"""
-WITH blocks AS (
-{SYNTH_DEPTH1_SQL}
-), k AS (
-  SELECT *, {CLASSIFY_SQL_CASE} AS kind FROM blocks WHERE conf > 0.3
-), layer AS (
-  SELECT doc_id, page, "offset", text, x1, y1, x2, y2,
-         (x2 - x1) * (y2 - y1) AS area
-  FROM blocks WHERE text IS NOT NULL
-), gathered AS (
-  SELECT d.doc_id, d.page, d."offset",
-    string_agg(l.text, '' ORDER BY l."offset") AS gtext
-  FROM k d JOIN layer l ON d.doc_id = l.doc_id AND d.page = l.page
-  WHERE d.kind IN {_TEXT_SET_SQL}
-    AND greatest(least(d.x2, l.x2) - greatest(d.x1, l.x1), 0)
-      * greatest(least(d.y2, l.y2) - greatest(d.y1, l.y1), 0)
-      > 0.5 * least(l.area, (d.x2 - d.x1) * (d.y2 - d.y1))
-    AND least(l.area, (d.x2 - d.x1) * (d.y2 - d.y1)) > 0
-  GROUP BY d.doc_id, d.page, d."offset"
-), emitted AS (
-  SELECT k.doc_id, k.page, k.y1, k.kind,
-    CASE WHEN k.x1 < 350 THEN 0 ELSE 1 END AS col,
-    CASE
-      WHEN k.kind IN {_MEDIA_SET_SQL} THEN NULL
-      WHEN k.kind = 'equation' THEN e'\\n$$\\n' || k.text || e'\\n$$\\n'
-      WHEN k.kind = 'table' THEN k.text
-      ELSE COALESCE(g.gtext, '')
-    END AS text,
-    CASE WHEN k.kind IN {_MEDIA_SET_SQL} THEN k.media_ref END AS media_ref
-  FROM k LEFT JOIN gathered g
-    ON k.doc_id = g.doc_id AND k.page = g.page AND k."offset" = g."offset"
-  WHERE k.kind IN {_MEDIA_SET_SQL}
-     OR (k.kind = 'equation' AND k.text IS NOT NULL)
-     OR (k.kind = 'table' AND k.text IS NOT NULL)
-     OR k.kind IN {_TEXT_SET_SQL}
-)
-SELECT doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id, page ORDER BY col, y1) - 1
-       AS INT) AS page_pos,
-  kind, text, media_ref
-FROM emitted
-"""
+    return extract_pages(synth_blocks(spark, sf_dir, "depth1"))
 
 
 def q_flagship_threecol(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL oracle for the xy-cut recursion's MULTI-cut path: the REAL
     page kernel runs over the three-column family
-    (synth_blocks_threecol) whose depth-0 sweep admits exactly TWO
-    valid cuts — pinning candidate dedup per gap, bisect assignment of
-    blocks over multiple cuts, and the reversed push of 3 children
+    (adapter.FAMILY_SQL["threecol"]) whose depth-0 sweep admits exactly
+    TWO valid cuts — pinning candidate dedup per gap, bisect assignment
+    of blocks over multiple cuts, and the reversed push of 3 children
     (flagship_depth1 only exercises nseg=2).  Reading order on this
     family is provably (column, y1), columns left first."""
-    from ..pipeline.adapter import synth_blocks_threecol
     from ..pipeline.extract import extract_pages
 
-    return extract_pages(synth_blocks_threecol(spark, sf_dir))
-
-
-FLAGSHIP_THREECOL_SQL = f"""
-WITH blocks AS (
-{SYNTH_THREECOL_SQL}
-), k AS (
-  SELECT *, {CLASSIFY_SQL_CASE} AS kind FROM blocks WHERE conf > 0.3
-), layer AS (
-  SELECT doc_id, page, "offset", text, x1, y1, x2, y2,
-         (x2 - x1) * (y2 - y1) AS area
-  FROM blocks WHERE text IS NOT NULL
-), gathered AS (
-  SELECT d.doc_id, d.page, d."offset",
-    string_agg(l.text, '' ORDER BY l."offset") AS gtext
-  FROM k d JOIN layer l ON d.doc_id = l.doc_id AND d.page = l.page
-  WHERE d.kind IN {_TEXT_SET_SQL}
-    AND greatest(least(d.x2, l.x2) - greatest(d.x1, l.x1), 0)
-      * greatest(least(d.y2, l.y2) - greatest(d.y1, l.y1), 0)
-      > 0.5 * least(l.area, (d.x2 - d.x1) * (d.y2 - d.y1))
-    AND least(l.area, (d.x2 - d.x1) * (d.y2 - d.y1)) > 0
-  GROUP BY d.doc_id, d.page, d."offset"
-), emitted AS (
-  SELECT k.doc_id, k.page, k.y1, k.kind,
-    CASE WHEN k.x1 < 350 THEN 0 WHEN k.x1 < 650 THEN 1 ELSE 2 END AS col,
-    CASE
-      WHEN k.kind IN {_MEDIA_SET_SQL} THEN NULL
-      WHEN k.kind = 'equation' THEN e'\\n$$\\n' || k.text || e'\\n$$\\n'
-      WHEN k.kind = 'table' THEN k.text
-      ELSE COALESCE(g.gtext, '')
-    END AS text,
-    CASE WHEN k.kind IN {_MEDIA_SET_SQL} THEN k.media_ref END AS media_ref
-  FROM k LEFT JOIN gathered g
-    ON k.doc_id = g.doc_id AND k.page = g.page AND k."offset" = g."offset"
-  WHERE k.kind IN {_MEDIA_SET_SQL}
-     OR (k.kind = 'equation' AND k.text IS NOT NULL)
-     OR (k.kind = 'table' AND k.text IS NOT NULL)
-     OR k.kind IN {_TEXT_SET_SQL}
-)
-SELECT doc_id, page,
-  CAST(row_number() OVER (PARTITION BY doc_id, page ORDER BY col, y1) - 1
-       AS INT) AS page_pos,
-  kind, text, media_ref
-FROM emitted
-"""
+    return extract_pages(synth_blocks(spark, sf_dir, "threecol"))
 
 
 def q_flagship_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL oracle for the xy-cut MARGIN-DECAY schedule: the REAL page
-    kernel runs over synth_blocks_decay, whose B/C pairs have an 8px
-    y-gap that no cut reaches until depth 3, where the decayed margin
-    (10 -> 10 -> 8.75 -> 6.5625) first admits it.  A constant-margin
-    mutant never cuts the pair and falls through to the x-major grid
-    fallback, which emits C (left) before B — the opposite of the
-    decay order (B upper first) — so the cross-engine hash pins the
-    decay schedule itself, which flagship_simple/depth1/threecol never
-    exercise.  Reading order on this family is provably (column, y1)
-    under any conf-filter subset."""
-    from ..pipeline.adapter import synth_blocks_decay
+    kernel runs over adapter.FAMILY_SQL["decay"], whose B/C pairs have
+    an 8px y-gap that no cut reaches until depth 3, where the decayed
+    margin (10 -> 10 -> 8.75 -> 6.5625) first admits it.  A
+    constant-margin mutant never cuts the pair and falls through to the
+    x-major grid fallback, which emits C (left) before B — the opposite
+    of the decay order (B upper first) — so the cross-engine hash pins
+    the decay schedule itself, which flagship_simple/depth1/threecol
+    never exercise.  Reading order on this family is provably (column,
+    y1) under any conf-filter subset."""
     from ..pipeline.extract import extract_pages
 
-    return extract_pages(synth_blocks_decay(spark, sf_dir))
+    return extract_pages(synth_blocks(spark, sf_dir, "decay"))
 
 
-FLAGSHIP_DECAY_SQL = f"""
+_MEDIA_SET_SQL = "('figure','icon','qrcode','barcode')"
+
+
+def _flagship_sql(family: str) -> str:
+    """DuckDB oracle of the whole flagship page DAG over an xy-cut
+    family: merge and containment no-op, the gather returns each row's
+    own text, reading order (column, y1) per page."""
+    return f"""
 WITH blocks AS (
-{SYNTH_DECAY_SQL}
+{_family(family)}
 ), k AS (
   SELECT *, {CLASSIFY_SQL_CASE} AS kind FROM blocks WHERE conf > 0.3
 ), layer AS (
@@ -4510,7 +4207,7 @@ WITH blocks AS (
   GROUP BY d.doc_id, d.page, d."offset"
 ), emitted AS (
   SELECT k.doc_id, k.page, k.y1, k.kind,
-    CASE WHEN k.x1 < 350 THEN 0 ELSE 1 END AS col,
+    {_COLUMN_KEY[family]} AS col,
     CASE
       WHEN k.kind IN {_MEDIA_SET_SQL} THEN NULL
       WHEN k.kind = 'equation' THEN e'\\n$$\\n' || k.text || e'\\n$$\\n'
@@ -4531,6 +4228,12 @@ SELECT doc_id, page,
   kind, text, media_ref
 FROM emitted
 """
+
+
+FLAGSHIP_SIMPLE_SQL = _flagship_sql("simple")
+FLAGSHIP_DEPTH1_SQL = _flagship_sql("depth1")
+FLAGSHIP_THREECOL_SQL = _flagship_sql("threecol")
+FLAGSHIP_DECAY_SQL = _flagship_sql("decay")
 
 
 def q_flagship_extract(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -243,7 +243,7 @@ def test_dual_extract_query_spark_vs_local(spark, sf001_dir):
     the same collected rows."""
     from dataclasses import replace
 
-    from latyas_spark.pipeline.adapter import synth_blocks_dual
+    from latyas_spark.pipeline.adapter import synth_blocks, with_dual_columns
     from latyas_spark.relational.registry import q_dual_extract
 
     got = {}
@@ -254,7 +254,8 @@ def test_dual_extract_query_spark_vs_local(spark, sf001_dir):
     for v in got.values():
         v.sort()
 
-    rows = [r.asDict() for r in synth_blocks_dual(spark, sf001_dir).collect()]
+    dual = with_dual_columns(synth_blocks(spark, sf001_dir))
+    rows = [r.asDict() for r in dual.collect()]
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append(r)

@@ -1,8 +1,9 @@
 """Fast relational-contract spot checks vs DuckDB at sf0.001.
 
-The full 22-query contract is exercised by scripts/check_contract.py
-(and by the driver at sf0.01); here we pin a representative subset so
-`pytest -x -q` catches oracle drift early.
+The full contract (147 queries, 143 with a DuckDB oracle) is exercised
+by scripts/check_contract.py (and by the driver at sf0.01); here we
+pin a representative subset so `pytest -x -q` catches oracle drift
+early.
 """
 
 import pandas as pd

@@ -102,7 +102,7 @@ def test_order_is_permutation():
 
 
 def test_margin_decay_family_discriminates_decay():
-    """The flagship_decay family geometry (adapter.synth_blocks_decay):
+    """The flagship_decay family geometry (adapter.FAMILY_SQL["decay"]):
     B upper-right / C lower-left with an 8px y-gap.  The decayed
     depth-3 margin (6.5625) cuts the pair -> B first; a constant-margin
     engine would fall to the x-major grid sort -> C first.  Pins that
