@@ -42,6 +42,13 @@ batch of pages addressed by page-start offsets:
      once per batch
 ``extract_page`` is the same function over one page.
 
+``extract_segments_dual`` runs the dual-source (E2, pdf2txt.py) DAG
+with the same page-start addressing.  It shares stages 0-3 (the detect
+front end, ``_detect``), the gather of stage 7 and the xy-cut of stage
+8 (``_reading_order``); its own steps are the C7 flip of the gather
+rects, the levenshtein arbitration per block and the unconditional CJK
+filter (``_cjk_xref``, E1's optional one).
+
 Extension beyond the reference's text-only sink (north rule:
 interleaved text + media): image-kind blocks are emitted as media spans
 (text NULL, media_ref kept) instead of being dropped.
@@ -58,6 +65,7 @@ import pandas as pd
 from . import blocktypes as bt
 from .overlap import MERGE_STRATEGIES, overlap_merge
 from .texmix import compose_text_with_equations
+from .textdist import relative_distance
 from .xycut import xy_cut_order
 
 
@@ -243,74 +251,61 @@ class SegmentSpans(NamedTuple):
     media_ref: np.ndarray
 
 
-def extract_segments(
-    x1: np.ndarray,
-    y1: np.ndarray,
-    x2: np.ndarray,
-    y2: np.ndarray,
-    conf: np.ndarray,
-    labels: Sequence[str],
-    texts: Sequence[Optional[str]],
-    media_refs: Sequence[Optional[str]],
-    starts: Sequence[int],
-    cfg: ExtractConfig = DEFAULT_CONFIG,
-    det: Optional[np.ndarray] = None,
-    offsets: Optional[np.ndarray] = None,
-) -> SegmentSpans:
-    """Run the full page DAG over many pages at once.
+def _page_index(starts: Sequence[int], n: int) -> Tuple[np.ndarray, np.ndarray]:
+    """Page-start addressing: the page-segment index of each of ``n``
+    rows, and the page ids 0..S that ``searchsorted`` turns into the
+    bounds of any page-sorted subset."""
+    bounds = np.append(np.asarray(starts, dtype=np.int64), n)
+    pages = np.arange(len(bounds))
+    return np.repeat(pages[:-1], np.diff(bounds)), pages
 
-    Rows are page-contiguous; page ``s`` is rows ``[starts[s],
-    starts[s+1])`` (the last page ends at the last row), each page in
-    span-offset order.  Every stage that does not depend on a page's
-    sweep order runs once over the whole batch, on within-page pairs
-    generated from the page offsets; only the J1 sweep (on pages where
-    some pair can trigger it), texmix composition (per has-equation
-    block) and xy-cut (per page with >= 2 blocks) stay per page.
 
-    Row semantics as in ``extract_page``: each row is both a detection
-    candidate and a text-layer rect; ``det`` restricts the text layer
-    to detector 0; ``offsets`` keys the texmix equation-line exclusion
-    (the row index when absent).
-    """
+def _clamped(x1, y1, x2, y2) -> Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """float64 rect columns under the Rectangle constructor clamp
+    x2 <- x1 if x1 >= x2, same for y (shape.py:74-77)."""
     x1 = np.asarray(x1, dtype=np.float64)
     y1 = np.asarray(y1, dtype=np.float64)
-    # Rectangle constructor clamp (shape.py:74-77): every row is a
-    # Rectangle in the reference, detection and text layer alike
     x2 = np.where(x1 >= x2, x1, np.asarray(x2, dtype=np.float64))
     y2 = np.where(y1 >= y2, y1, np.asarray(y2, dtype=np.float64))
-    conf = np.asarray(conf, dtype=np.float64)
-    labels = np.asarray(labels, dtype=object)
-    texts = np.asarray(texts, dtype=object)
-    media_refs = np.asarray(media_refs, dtype=object)
+    return x1, y1, x2, y2
+
+
+def _text_layer(x1, y1, x2, y2, texts, in_layer, row_page, pages):
+    """The native text layer of a batch: source row, rect, area and
+    text of every ``in_layer`` row, and per-page bounds (page ``p`` is
+    layer rows ``[bounds[p], bounds[p+1])``)."""
+    idx = np.flatnonzero(in_layer)
+    rects = np.stack([x1[idx], y1[idx], x2[idx], y2[idx]], axis=1)
+    areas = (rects[:, 2] - rects[:, 0]) * (rects[:, 3] - rects[:, 1])
+    return idx, rects, areas, texts[idx], np.searchsorted(row_page[idx], pages)
+
+
+class _Blocks(NamedTuple):
+    """Detected blocks after the J1 merge, page-sorted: source row (the
+    payload carrier), merged rect and kind of each survivor; page ``p``
+    is blocks ``[bounds[p], bounds[p+1])``."""
+
+    src: np.ndarray
+    x1: np.ndarray
+    y1: np.ndarray
+    x2: np.ndarray
+    y2: np.ndarray
+    kind: np.ndarray
+    page: np.ndarray
+    bounds: np.ndarray
+
+
+def _detect(x1, y1, x2, y2, conf, labels, row_page, pages, cfg) -> _Blocks:
+    """The detect front end both DAGs share (model.detect,
+    ultralytics_layout_model.py:81-87): confidence filter, label ->
+    kind and the J1 overlap merge, over clamped rects."""
     if cfg.merge_strategy not in MERGE_STRATEGIES:
         raise ValueError(f"unsupported overlapping strategy: {cfg.merge_strategy}")
-    n = len(x1)
-    if n == 0:
-        empty = np.empty(0, dtype=object)
-        return SegmentSpans(np.empty(0, dtype=np.int64), empty, empty, empty)
-    bounds = np.append(np.asarray(starts, dtype=np.int64), n)
-    S = len(bounds) - 1
-    row_page = np.repeat(np.arange(S), np.diff(bounds))
-    pages = np.arange(S + 1)
-    key = np.arange(n) if offsets is None else np.asarray(offsets)
-
-    # text layer: every row with native text, regardless of confidence
-    in_layer = texts != None  # noqa: E711 (elementwise on object arrays)
-    if det is not None:
-        in_layer &= np.asarray(det) == 0
-    layer_idx = np.flatnonzero(in_layer)
-    layer_rects = np.stack(
-        [x1[layer_idx], y1[layer_idx], x2[layer_idx], y2[layer_idx]], axis=1
-    )
-    layer_areas = (layer_rects[:, 2] - layer_rects[:, 0]) * (
-        layer_rects[:, 3] - layer_rects[:, 1]
-    )
-    layer_texts = texts[layer_idx]
-    layer_bounds = np.searchsorted(row_page[layer_idx], pages)
+    labels = np.asarray(labels, dtype=object)
 
     # stage 1-2: confidence filter + label classification, the ordered
     # substring parse run once per distinct label
-    cand = np.flatnonzero(conf > cfg.conf_threshold)
+    cand = np.flatnonzero(np.asarray(conf, dtype=np.float64) > cfg.conf_threshold)
     codes, uniq = pd.factorize(labels[cand])
     if (codes < 0).any():
         # a null label has no kind; fail as the label parser always has
@@ -344,10 +339,83 @@ def extract_segments(
             bx1[k], by1[k], bx2[k], by2[k], bk[k] = mx1, my1, mx2, my2, mk
         cand = cand[keep]
         bx1, by1, bx2, by2, bk = bx1[keep], by1[keep], bx2[keep], by2[keep], bk[keep]
-    src = cand  # surviving block -> original row (payload carrier)
+    bpage = row_page[cand]
+    return _Blocks(cand, bx1, by1, bx2, by2, bk, bpage, np.searchsorted(bpage, pages))
+
+
+def _reading_order(blocks: _Blocks, cfg: ExtractConfig) -> np.ndarray:
+    """xy-cut reflow (margin, horizontal-first), per page with at least
+    two blocks: the block indices in page-major reading order.  Plain
+    lists, since xy_cut_order converts its inputs to lists anyway."""
+    order = np.arange(len(blocks.src))
+    bounds = blocks.bounds
+    lx1, ly1 = blocks.x1.tolist(), blocks.y1.tolist()
+    lx2, ly2 = blocks.x2.tolist(), blocks.y2.tolist()
+    for p in np.flatnonzero(np.diff(bounds) >= 2):
+        a, b = bounds[p], bounds[p + 1]
+        order[a:b] = a + xy_cut_order(
+            lx1[a:b], ly1[a:b], lx2[a:b], ly2[a:b], margin=cfg.xy_margin,
+            horizontal_first=True, max_depth=cfg.max_depth,
+        )
+    return order
+
+
+def _cjk_xref(text: str) -> bool:
+    """CJK cross-reference snippet (pdf2txt.py:86-92): starts with
+    图/表, or is short and says 见表/见图."""
+    return text.startswith(("图", "表")) or (
+        len(text) < 256 and ("见表" in text or "见图" in text)
+    )
+
+
+def extract_segments(
+    x1: np.ndarray,
+    y1: np.ndarray,
+    x2: np.ndarray,
+    y2: np.ndarray,
+    conf: np.ndarray,
+    labels: Sequence[str],
+    texts: Sequence[Optional[str]],
+    media_refs: Sequence[Optional[str]],
+    starts: Sequence[int],
+    cfg: ExtractConfig = DEFAULT_CONFIG,
+    det: Optional[np.ndarray] = None,
+    offsets: Optional[np.ndarray] = None,
+) -> SegmentSpans:
+    """Run the full page DAG over many pages at once.
+
+    Rows are page-contiguous; page ``s`` is rows ``[starts[s],
+    starts[s+1])`` (the last page ends at the last row), each page in
+    span-offset order.  Every stage that does not depend on a page's
+    sweep order runs once over the whole batch, on within-page pairs
+    generated from the page offsets; only the J1 sweep (on pages where
+    some pair can trigger it), texmix composition (per has-equation
+    block) and xy-cut (per page with >= 2 blocks) stay per page.
+
+    Row semantics as in ``extract_page``: each row is both a detection
+    candidate and a text-layer rect; ``det`` restricts the text layer
+    to detector 0; ``offsets`` keys the texmix equation-line exclusion
+    (the row index when absent).
+    """
+    # every row is a Rectangle in the reference, detection and text
+    # layer alike
+    x1, y1, x2, y2 = _clamped(x1, y1, x2, y2)
+    texts = np.asarray(texts, dtype=object)
+    media_refs = np.asarray(media_refs, dtype=object)
+    row_page, pages = _page_index(starts, len(x1))
+    key = np.arange(len(x1)) if offsets is None else np.asarray(offsets)
+
+    # text layer: every row with native text, regardless of confidence
+    in_layer = texts != None  # noqa: E711 (elementwise on object arrays)
+    if det is not None:
+        in_layer &= np.asarray(det) == 0
+    layer_idx, layer_rects, layer_areas, layer_texts, layer_bounds = _text_layer(
+        x1, y1, x2, y2, texts, in_layer, row_page, pages
+    )
+
+    blocks = _detect(x1, y1, x2, y2, conf, labels, row_page, pages, cfg)
+    src, bx1, by1, bx2, by2, bk, bpage, _ = blocks
     m = len(src)
-    bpage = row_page[src]
-    block_bounds = np.searchsorted(bpage, pages)
     block_text = np.full(m, None, dtype=object)
     has_eq = np.zeros(m, dtype=bool)
 
@@ -408,25 +476,12 @@ def extract_segments(
         q_lo=layer_bounds[bpage[plain]], q_hi=layer_bounds[bpage[plain] + 1],
     )
     if cfg.cjk_filters:
-        # pdf2txt.py:86-89: drop CJK cross-reference snippets
-        kept = np.array([
-            not (t.startswith("图") or t.startswith("表")
-                 or (len(t) < 256 and ("见表" in t or "见图" in t)))
-            for t in gathered
-        ], dtype=bool)
+        kept = np.array([not _cjk_xref(t) for t in gathered], dtype=bool)
         plain, gathered = plain[kept], gathered[kept]
     block_text[plain] = gathered
 
-    # stage 8: xy-cut reflow, per page with at least two blocks; plain
-    # lists, since xy_cut_order converts its inputs to lists anyway
-    order = np.arange(m)
-    lx1, ly1, lx2, ly2 = bx1.tolist(), by1.tolist(), bx2.tolist(), by2.tolist()
-    for p in np.flatnonzero(np.diff(block_bounds) >= 2):
-        a, b = block_bounds[p], block_bounds[p + 1]
-        order[a:b] = a + xy_cut_order(
-            lx1[a:b], ly1[a:b], lx2[a:b], ly2[a:b], margin=cfg.xy_margin,
-            horizontal_first=True, max_depth=cfg.max_depth,
-        )
+    # stage 8: xy-cut reflow
+    order = _reading_order(blocks, cfg)
 
     # stage 9: emission as column arrays: media spans for image kinds,
     # else blocks with text except EmbedEq, Equation $$-wrapped
@@ -534,22 +589,24 @@ def extract_page(
 ARBITRATE_KINDS = frozenset({bt.TEXT, bt.TITLE, bt.CAPTION})
 
 
-def extract_page_dual(
+def extract_segments_dual(
     x1: np.ndarray,
     y1: np.ndarray,
     x2: np.ndarray,
     y2: np.ndarray,
     conf: np.ndarray,
     labels: Sequence[str],
+    texts: Sequence[Optional[str]],
     ocr_texts: Sequence[Optional[str]],
     lx1: np.ndarray,
     ly1: np.ndarray,
     lx2: np.ndarray,
     ly2: np.ndarray,
-    texts: Sequence[Optional[str]],
+    starts: Sequence[int],
     cfg: ExtractConfig = DEFAULT_CONFIG,
-) -> List[Span]:
-    """Dual-source (E2) page pipeline: the reference's ``pdf2txt.py``
+) -> SegmentSpans:
+    """Dual-source (E2) DAG over many pages at once, with the page-start
+    addressing of ``extract_segments``: the reference's ``pdf2txt.py``
     arbitration variant (get_page_text, pdf2txt.py:52-100).
 
     Each row carries a detection bbox in RENDER coords (x1..y2; the
@@ -558,104 +615,49 @@ def extract_page_dual(
     bottom-left) and text.  ``ocr_texts`` is the OCR-model output for
     the row's region (the pluggable model call of the reference).
 
-    Stages (reference cites):
-      1. confidence filter + classify + overlap merge — inside
-         model.detect (ultralytics_layout_model.py:81-87)
-      2. for Text/Title/Caption blocks only (pdf2txt.py:68):
-         C7 coordinate flip+descale of the detection bbox
-         (pdf2txt.py:71), PDF-text gather over the text layer
-         (get_text_by_bbox, pdf2txt.py:29-49), levenshtein arbitration
-         ``dis/max(len) < 0.2 -> pdf text else ocr text``
-         (pdf2txt.py:81-88), unconditional CJK cross-ref filters
-         (pdf2txt.py:89-92)
-      3. xy-cut reflow over all blocks (pdf2txt.py:93-94)
-      4. emit blocks with text, in reading order (pdf2txt.py:100)
+    Stages: detect (shared with E1); for Text/Title/Caption blocks only
+    (pdf2txt.py:68), the C7 flip+descale of the bbox (:71), the PDF-text
+    gather over the page's text layer (get_text_by_bbox, :29-49) in one
+    call for the batch, levenshtein arbitration per block ``dis/max(len)
+    < 0.2 -> pdf text else ocr text`` (:81-88) and the unconditional CJK
+    cross-ref filter (:89-92); xy-cut over all blocks (shared, :93-94);
+    emit blocks with text in reading order (:100).
     """
-    x1 = np.asarray(x1, dtype=np.float64)
-    y1 = np.asarray(y1, dtype=np.float64)
-    x2 = np.asarray(x2, dtype=np.float64)
-    y2 = np.asarray(y2, dtype=np.float64)
-    conf = np.asarray(conf, dtype=np.float64)
-    n = len(x1)
-
+    texts = np.asarray(texts, dtype=object)
+    ocr_texts = np.asarray(ocr_texts, dtype=object)
+    row_page, pages = _page_index(starts, len(texts))
     # PDF text layer (textpage rects): rows with native text
-    layer_idx = [i for i in range(n) if texts[i] is not None]
-    if layer_idx:
-        layer_rects = np.stack(
-            [
-                np.asarray(lx1, dtype=np.float64)[layer_idx],
-                np.asarray(ly1, dtype=np.float64)[layer_idx],
-                np.asarray(lx2, dtype=np.float64)[layer_idx],
-                np.asarray(ly2, dtype=np.float64)[layer_idx],
-            ],
-            axis=1,
-        )
-        # Rectangle constructor clamp (shape.py:74-77)
-        layer_rects[:, 2] = np.maximum(layer_rects[:, 2], layer_rects[:, 0])
-        layer_rects[:, 3] = np.maximum(layer_rects[:, 3], layer_rects[:, 1])
-        layer_areas = (layer_rects[:, 2] - layer_rects[:, 0]) * (
-            layer_rects[:, 3] - layer_rects[:, 1]
-        )
-    else:
-        layer_rects = np.empty((0, 4))
-        layer_areas = np.empty(0)
-    layer_texts = [texts[i] for i in layer_idx]
-
-    # stage 1: detect = conf filter + classify + overlap merge
-    det = np.nonzero(conf > cfg.conf_threshold)[0]
-    kinds = bt.kinds_from_labels([labels[i] for i in det])
-    keep, bx1, by1, bx2, by2, bkinds = overlap_merge(
-        x1[det], y1[det], x2[det], y2[det],
-        kinds, bt.TEXT_KIND_LOOKUP,
-        area_threshold=cfg.area_threshold,
-        strategy=cfg.merge_strategy,
+    in_layer = texts != None  # noqa: E711 (elementwise on object arrays)
+    _, layer_rects, layer_areas, layer_texts, layer_bounds = _text_layer(
+        *_clamped(lx1, ly1, lx2, ly2), texts, in_layer, row_page, pages
     )
-    src = det[keep]
-    m = len(src)
-    block_text: List[Optional[str]] = [None] * m
+    blocks = _detect(*_clamped(x1, y1, x2, y2), conf, labels, row_page, pages, cfg)
 
-    # stage 2: per-block arbitration
-    from .textdist import relative_distance
-
-    rs = cfg.render_scale
-    H = cfg.page_height
-    arb = [b for b in range(m) if bkinds[b] in ARBITRATE_KINDS]
     # C7: render coords -> PDF coords (pdf2txt.py:71: x/rs, H - y/rs
     # with y1/y2 swapping roles under the flip)
+    arb = np.flatnonzero(np.isin(blocks.kind, list(ARBITRATE_KINDS)))
+    rs, H, page = cfg.render_scale, cfg.page_height, blocks.page[arb]
     pdf_texts = gather_text_batch(
-        bx1[arb] / rs,
-        H - by2[arb] / rs,
-        bx2[arb] / rs,
-        H - by1[arb] / rs,
+        blocks.x1[arb] / rs, H - blocks.y2[arb] / rs,
+        blocks.x2[arb] / rs, H - blocks.y1[arb] / rs,
         layer_rects, layer_areas, layer_texts, cfg.gather_ratio,
+        q_lo=layer_bounds[page], q_hi=layer_bounds[page + 1],
     )
-    for b, pdf_text in zip(arb, pdf_texts):
-        ocr = ocr_texts[src[b]] or ""
-        if relative_distance(ocr, pdf_text) < cfg.arbitrate_threshold:
-            text = pdf_text
-        else:
-            text = ocr
-        # CJK cross-ref filters, unconditional here (pdf2txt.py:89-92)
-        if text.startswith("图") or text.startswith("表"):
-            continue
-        if len(text) < 256 and ("见表" in text or "见图" in text):
-            continue
-        block_text[b] = text
+    block_text = np.full(len(blocks.src), None, dtype=object)
+    for b, ocr, pdf_text in zip(arb, ocr_texts[blocks.src[arb]], pdf_texts):
+        ocr = ocr or ""
+        near = relative_distance(ocr, pdf_text) < cfg.arbitrate_threshold
+        text = pdf_text if near else ocr
+        if not _cjk_xref(text):
+            block_text[b] = text
 
-    # stage 3: xy-cut reflow (render coords, defaults: pdf2txt.py:93)
-    order = xy_cut_order(
-        bx1, by1, bx2, by2, margin=cfg.xy_margin, horizontal_first=True,
-        max_depth=cfg.max_depth,
+    # xy-cut reflow (render coords), then emission: text blocks only
+    order = _reading_order(blocks, cfg)
+    order = order[block_text[order] != None]  # noqa: E711
+    return SegmentSpans(
+        blocks.page[order], _KIND_NAME_ARR[blocks.kind[order]], block_text[order],
+        np.full(len(order), None, dtype=object),
     )
-
-    # stage 4: emission — text blocks only (pdf2txt.py:100)
-    out: List[Span] = []
-    for b in order:
-        text = block_text[b]
-        if text is None:
-            continue
-        out.append((bt.KIND_NAMES[int(bkinds[b])], text, None))
-    return out
 
 
 def extract_document_rows(

@@ -37,8 +37,9 @@ Scale design (SURVEY.md §4.3):
   has-equation block.  Doc-wide order (doc mode) and page-local
   position (page mode) are run positions over the page-major span
   arrays; the two mapInPandas functions differ only in that output
-  shape.  The dual-source kernel shares the driver and calls
-  ``extract_page_dual`` per page.
+  shape.  The dual-source DAG runs through the same windows
+  (``extract_segments_dual``: the same detect front end and xy-cut,
+  one gather over the window, levenshtein arbitration per block).
 * **Keep the JVM out of the hot path.**  Both join inputs are
   repartitioned by doc_id so the join itself needs no exchange
   (requires spark.sql.requireAllClusterKeysForCoPartition=false, set
@@ -76,8 +77,8 @@ from ..core.document import (  # noqa: F401 (extract_page is re-exported)
     ExtractConfig,
     SegmentSpans,
     extract_page,
-    extract_page_dual,
     extract_segments,
+    extract_segments_dual,
 )
 
 # Columns the page kernel consumes.
@@ -163,41 +164,33 @@ def _page_starts(cols: _Cols) -> np.ndarray:
     return np.concatenate(([0], np.flatnonzero(change) + 1))
 
 
-def _e1_spans(cols: _Cols, starts: np.ndarray, cfg: ExtractConfig) -> SegmentSpans:
-    """Flagship (E1, analyze_pdf) kernel over a whole chunk: one
-    segmented call per page-aligned window of KERNEL_WINDOW_ROWS."""
+def _spans(cols: _Cols, starts: np.ndarray, cfg: ExtractConfig) -> SegmentSpans:
+    """The segmented kernel over a whole chunk, one call per page-aligned
+    window of KERNEL_WINDOW_ROWS: the E1 (analyze_pdf) DAG, or the dual
+    (E2, pdf2txt.py) one when the chunk carries ``ocr_text``."""
     bounds = np.append(starts, cols.n)
     cuts = np.unique(
         np.searchsorted(starts, np.arange(0, cols.n, KERNEL_WINDOW_ROWS), "right") - 1
     )
     parts = []
     for ws, we in zip(cuts, np.append(cuts[1:], len(starts))):
-        rs, re_ = bounds[ws], bounds[we]
-        spans = extract_segments(
-            cols.x1[rs:re_], cols.y1[rs:re_], cols.x2[rs:re_], cols.y2[rs:re_],
-            cols.conf[rs:re_], cols.label[rs:re_], cols.text[rs:re_],
-            cols.media_ref[rs:re_], starts[ws:we] - rs, cfg,
-            det=None if cols.det is None else cols.det[rs:re_],
-            offsets=cols.offset[rs:re_],
-        )
+        w = slice(bounds[ws], bounds[we])
+        rows = (cols.x1[w], cols.y1[w], cols.x2[w], cols.y2[w],
+                cols.conf[w], cols.label[w], cols.text[w])
+        page_starts = starts[ws:we] - bounds[ws]
+        if cols.ocr_text is None:
+            spans = extract_segments(
+                *rows, cols.media_ref[w], page_starts, cfg,
+                det=None if cols.det is None else cols.det[w],
+                offsets=cols.offset[w],
+            )
+        else:
+            spans = extract_segments_dual(
+                *rows, cols.ocr_text[w], cols.lx1[w], cols.ly1[w], cols.lx2[w],
+                cols.ly2[w], page_starts, cfg,
+            )
         parts.append(spans._replace(page=spans.page + ws))
     return SegmentSpans(*(np.concatenate(c) for c in zip(*parts)))
-
-
-def _dual_spans(cols: _Cols, starts: np.ndarray, cfg: ExtractConfig) -> SegmentSpans:
-    """Dual-source (E2, pdf2txt.py) kernel: extract_page_dual per page."""
-    page, spans = [], []
-    for p, (ps, pe) in enumerate(zip(starts, np.append(starts[1:], cols.n))):
-        out = extract_page_dual(
-            cols.x1[ps:pe], cols.y1[ps:pe], cols.x2[ps:pe], cols.y2[ps:pe],
-            cols.conf[ps:pe], cols.label[ps:pe], cols.ocr_text[ps:pe],
-            cols.lx1[ps:pe], cols.ly1[ps:pe], cols.lx2[ps:pe], cols.ly2[ps:pe],
-            cols.text[ps:pe], cfg,
-        )
-        page += [p] * len(out)
-        spans += out
-    arr = np.array(spans, dtype=object).reshape(-1, 3)
-    return SegmentSpans(np.array(page, dtype=np.int64), arr[:, 0], arr[:, 1], arr[:, 2])
 
 
 def _run_positions(keys: np.ndarray) -> np.ndarray:
@@ -267,16 +260,15 @@ def _sorted_partition_chunks(
 
 
 def _kernel(cfg: ExtractConfig, frame):
-    """The one kernel driver: sort the partition, run the E1 kernel (or
-    the dual one, when the chunk carries ``ocr_text``) over all its
-    pages, and hand the spans to ``frame`` for the output shape."""
+    """The one kernel driver: sort the partition, run the segmented
+    kernel over all its pages, and hand the spans to ``frame`` for the
+    output shape."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for chunk in _sorted_partition_chunks(batches):
             cols = _Cols(chunk)
             starts = _page_starts(cols)
-            spans_of = _e1_spans if cols.ocr_text is None else _dual_spans
-            yield frame(cols, starts, spans_of(cols, starts, cfg))
+            yield frame(cols, starts, _spans(cols, starts, cfg))
 
     return run
 

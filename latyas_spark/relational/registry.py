@@ -3986,7 +3986,7 @@ def q_dual_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partial SQL oracle for the DUAL (pdf2txt.py) DAG — the dual twin
     of q_flagship_simple: the REAL dual kernel (conf filter -> classify
     -> overlap merge -> C7 flip -> gather -> levenshtein arbitration ->
-    CJK filters -> xy-cut -> emit, extract_page_dual) runs end-to-end
+    CJK filters -> xy-cut -> emit, extract_segments_dual) runs end-to-end
     over a family where every data-dependent stage provably
     degenerates:
 

@@ -1,10 +1,11 @@
 """Partition-driver parity: the mapInPandas kernels (doc mode and page
-mode) run directly on pandas frames, no Spark, against the independent
-oracle port on random multi-doc, multi-page geometry with shuffled
-rows.  tests/test_property.py covers one document through the per-page
-entry point; this file covers what the drivers add on top: sorting,
-page segmentation, page-aligned kernel windows, the vectorized merge
-pre-test over many pages at once, and doc-wide / page-local ordering."""
+mode, E1 and dual-source frames) run directly on pandas frames, no
+Spark, against the independent oracle port on random multi-doc,
+multi-page geometry with shuffled rows.  tests/test_property.py covers
+one document through the per-page entry point; this file covers what
+the drivers add on top: sorting, page segmentation, page-aligned kernel
+windows, the vectorized merge pre-test over many pages at once, and
+doc-wide / page-local ordering."""
 
 import math
 
@@ -16,7 +17,12 @@ from hypothesis import strategies as st
 
 from latyas_spark.core.document import DEFAULT_CONFIG, ExtractConfig, extract_page
 from latyas_spark.fixtures import doc_rows as fixture_rows
-from latyas_spark.oracle.ref_port import extract_document_oracle, extract_page_oracle
+from latyas_spark.oracle.ref_port import (
+    extract_document_dual_oracle,
+    extract_document_oracle,
+    extract_page_dual_oracle,
+    extract_page_oracle,
+)
 from latyas_spark.pipeline import extract as EX
 from latyas_spark.pipeline.presets import get_preset
 
@@ -95,6 +101,29 @@ def corpora(draw):
     return [draw(doc_rows(f"d{i}")) for i in range(draw(st.integers(1, 4)))]
 
 
+@st.composite
+def dual_corpora(draw):
+    """``corpora`` with the dual-source columns: an OCR output that is
+    missing, the native text, a near copy or unrelated, and a text-layer
+    rect that is the row's C7 image (pdf2txt.py:71) plus jitter.  Half
+    the rows get a label the dual DAG arbitrates (pdf2txt.py:68)."""
+    docs = draw(corpora())
+    rs, H = DEFAULT_CONFIG.render_scale, DEFAULT_CONFIG.page_height
+    jitter = st.integers(-6, 6)
+    for r in (r for doc in docs for r in doc):
+        if draw(st.booleans()):
+            r["label"] = draw(st.sampled_from(["text", "Title", "caption"]))
+        native = r["text"] or ""
+        r["ocr_text"] = draw(st.sampled_from(
+            [None, r["text"], native[:-1] + "x", draw(texts)]
+        ))
+        r["lx1"] = r["x1"] / rs + draw(jitter)
+        r["ly1"] = H - r["y2"] / rs + draw(jitter)
+        r["lx2"] = r["x2"] / rs + draw(jitter)
+        r["ly2"] = H - r["y1"] / rs + draw(jitter)
+    return docs
+
+
 def _frame(rows, cols, perm):
     frame = pd.DataFrame(rows, columns=cols)
     return frame.iloc[list(perm)].reset_index(drop=True)
@@ -137,19 +166,12 @@ def _page_spans(out, doc_id, page):
     return [(r.kind, r.text, r.media_ref) for r in sub.itertuples(index=False)]
 
 
-@settings(max_examples=200, deadline=None)
-@given(
-    corpora(),
-    st.sampled_from(CONFIGS),
-    st.randoms(use_true_random=False),
-    st.integers(0, 40),
-    st.sampled_from([1, 5, 16, 8192]),
-)
-def test_partition_drivers_equal_oracle(docs, cfg, rnd, cut, window):
+def _assert_drivers_equal_oracle(docs, cols, cfg, rnd, cut, window, doc_oracle,
+                                 page_oracle):
     rows = [r for doc in docs for r in doc]
     perm = list(range(len(rows)))
     rnd.shuffle(perm)
-    batches = _batches(_frame(rows, EX.KERNEL_COLS, perm), cut)
+    batches = _batches(_frame(rows, cols, perm), cut)
 
     doc_out = _run(EX._doc_mode_kernel(cfg), batches, window)
     page_out = _run(EX._page_mode_kernel(cfg), batches, window)
@@ -157,9 +179,9 @@ def test_partition_drivers_equal_oracle(docs, cfg, rnd, cut, window):
         doc_id = doc[0]["doc_id"] if doc else None
         if doc_id is None:
             continue
-        assert _doc_spans(doc_out, doc_id) == extract_document_oracle(doc, cfg)
+        assert _doc_spans(doc_out, doc_id) == doc_oracle(doc, cfg)
         for page in sorted({r["page"] for r in doc}):
-            want = extract_page_oracle(
+            want = page_oracle(
                 sorted((r for r in doc if r["page"] == page), key=lambda r: r["offset"]),
                 cfg,
             )
@@ -169,6 +191,43 @@ def test_partition_drivers_equal_oracle(docs, cfg, rnd, cut, window):
         assert set(doc_out["doc_id"]) <= {d[0]["doc_id"] for d in docs if d}
         for _, sub in doc_out.groupby("doc_id"):
             assert list(sub["order"]) == list(range(len(sub)))
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    corpora(),
+    st.sampled_from(CONFIGS),
+    st.randoms(use_true_random=False),
+    st.integers(0, 40),
+    st.sampled_from([1, 5, 16, 8192]),
+)
+def test_partition_drivers_equal_oracle(docs, cfg, rnd, cut, window):
+    _assert_drivers_equal_oracle(
+        docs, EX.KERNEL_COLS, cfg, rnd, cut, window,
+        extract_document_oracle, extract_page_oracle,
+    )
+
+
+# The dual DAG takes only the detect and arbitration parameters from the
+# config (the oracle's sweep is the default "merge" strategy).
+DUAL_CONFIGS = [c for c in CONFIGS if c.merge_strategy == "merge"] + [
+    ExtractConfig(arbitrate_threshold=0.6),
+]
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    dual_corpora(),
+    st.sampled_from(DUAL_CONFIGS),
+    st.randoms(use_true_random=False),
+    st.integers(0, 40),
+    st.sampled_from([1, 5, 16, 8192]),
+)
+def test_dual_partition_drivers_equal_oracle(docs, cfg, rnd, cut, window):
+    _assert_drivers_equal_oracle(
+        docs, EX.KERNEL_COLS + EX.DUAL_EXTRA_COLS, cfg, rnd, cut, window,
+        extract_document_dual_oracle, extract_page_dual_oracle,
+    )
 
 
 def _second_detector(doc, rnd):
@@ -223,7 +282,17 @@ def test_multi_detector_frames_equal_per_page_kernel(docs, rnd, cut, window):
 # --- bad input still fails loudly (until per-doc quarantine exists) ----
 
 
-def _bad_frame(**bad):
+# Both drivers on E1 and dual frames: the two DAGs share one detect
+# front end, so they must fail (and ignore under-cut rows) alike.
+DRIVERS = [
+    pytest.param(make, cols, id=make.__name__ + suffix)
+    for suffix, cols in (("", EX.KERNEL_COLS),
+                         ("-dual", EX.KERNEL_COLS + EX.DUAL_EXTRA_COLS))
+    for make in (EX._doc_mode_kernel, EX._page_mode_kernel)
+]
+
+
+def _bad_frame(cols, **bad):
     rows = []
     for i in range(6):
         rows.append({
@@ -231,35 +300,38 @@ def _bad_frame(**bad):
             "x1": 10.0 + 40 * i, "y1": 10.0 + 60 * i,
             "x2": 200.0 + 40 * i, "y2": 50.0 + 60 * i,
             "conf": 0.9, "label": "text", "text": f"t{i}", "media_ref": None,
+            "ocr_text": f"t{i}",
+            "lx1": 5.0 + 20 * i, "ly1": 1075.0 - 30 * i,
+            "lx2": 100.0 + 20 * i, "ly2": 1095.0 - 30 * i,
         })
     rows[3].update(bad)
     good = [dict(r, doc_id="good-doc") for r in rows]
-    return pd.DataFrame(rows + good, columns=EX.KERNEL_COLS)
+    return pd.DataFrame(rows + good, columns=cols)
 
 
-@pytest.mark.parametrize("make", [EX._doc_mode_kernel, EX._page_mode_kernel])
-def test_null_label_raises(make):
+@pytest.mark.parametrize("make, cols", DRIVERS)
+def test_null_label_raises(make, cols):
     """A null label must not borrow another label's kind: both drivers
     raise, as the per-row label parse always did."""
     with pytest.raises(AttributeError):
-        list(make(DEFAULT_CONFIG)(iter([_bad_frame(label=None)])))
+        list(make(DEFAULT_CONFIG)(iter([_bad_frame(cols, label=None)])))
 
 
-@pytest.mark.parametrize("make", [EX._doc_mode_kernel, EX._page_mode_kernel])
-def test_null_label_under_confidence_cut_is_ignored(make):
+@pytest.mark.parametrize("make, cols", DRIVERS)
+def test_null_label_under_confidence_cut_is_ignored(make, cols):
     """Only detection candidates are classified: a null label on a row
     the confidence filter drops never reaches the label parse."""
-    out = list(make(DEFAULT_CONFIG)(iter([_bad_frame(label=None, conf=0.1)])))
+    out = list(make(DEFAULT_CONFIG)(iter([_bad_frame(cols, label=None, conf=0.1)])))
     assert len(out) == 1 and len(out[0])
 
 
-@pytest.mark.parametrize("make", [EX._doc_mode_kernel, EX._page_mode_kernel])
-def test_nan_coordinate_raises(make):
+@pytest.mark.parametrize("make, cols", DRIVERS)
+def test_nan_coordinate_raises(make, cols):
     """A NaN bottom edge on a detection makes the xy-cut's grid
     fallback raise (int(nan)); it must not pass silently."""
     rows = fixture_rows("doc-00000000")
     assert rows[0]["conf"] > DEFAULT_CONFIG.conf_threshold
     rows[0]["y2"] = math.nan
-    frame = pd.DataFrame(rows, columns=EX.KERNEL_COLS)
+    frame = pd.DataFrame(rows, columns=cols)
     with pytest.raises(ValueError):
         list(make(DEFAULT_CONFIG)(iter([frame])))
