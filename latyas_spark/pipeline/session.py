@@ -22,7 +22,7 @@ def build_session(
       cluster scale).
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count())
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
