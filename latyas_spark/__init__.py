@@ -18,4 +18,10 @@ docstrings point into /root/reference (read-only) so parity can be
 audited file:line by file:line; no reference code is copied.
 """
 
+from latyas_spark import zipcache
+
 __version__ = "0.1.0"
+
+# Every Python worker that unpickles a kernel imports this package, so
+# this is where the per-task zipimport re-parse is removed for them.
+zipcache.install()

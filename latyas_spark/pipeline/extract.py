@@ -361,7 +361,13 @@ def _kernel_partitions(df: DataFrame) -> int:
     64MB advisory size — the kernel is CPU-bound per row, not
     byte-bound, so byte-based coalescing would idle most cores.  4x the
     core count smooths stragglers (per-doc work varies by page count),
-    trading a little Arrow-batch overhead for even task waves."""
+    at a fixed cost per extra task.  With the per-task zipimport
+    re-parse gone (``latyas_spark.zipcache``), that cost is 12-16 ms in
+    the Python worker plus about 0.1 s per task wave outside it (64-task
+    identity stage, 4-core host).  On the same host, ``extract_spans``
+    over 5,000 1-3-page docs took 2.23 s at 16 tasks, 1.78 s at 8 and
+    1.73 s at 4 (medians of 3), so fewer waves would still pay; the
+    width stays until that remaining cost is attributed."""
     spark = df.sparkSession
     base = int(
         spark.conf.get(

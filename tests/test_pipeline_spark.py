@@ -88,6 +88,45 @@ def test_plan_has_no_python_row_udfs(spark, corpus_dir):
     assert "MapInPandas" in plan  # Arrow-batched kernel stage
 
 
+def test_kernel_import_installs_zipcache_in_workers(spark, corpus_dir):
+    """A worker that has run a kernel task has imported latyas_spark,
+    and with it the stat-keyed zipimport invalidation that spares every
+    later task the re-parse of pyspark.zip."""
+    from latyas_spark.zipcache import MARKER
+
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    blocks = spark.read.parquet(f"{corpus_dir}/layout_blocks.parquet")
+    assert extract_spans(docs, blocks).collect()
+
+    # Pickled by value and names no latyas_spark module, so running it
+    # imports nothing from the package in the worker.
+    def probe(chunks, marker=MARKER):
+        import os
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        for _ in chunks:
+            pass
+        yield pd.DataFrame({
+            "pid": [os.getpid()],
+            "kernel_seen": ["latyas_spark" in sys.modules],
+            "shim": [getattr(zipimport.zipimporter.invalidate_caches,
+                             marker, False)],
+        })
+
+    rows = (
+        spark.range(0, 8, 1, 8)
+        .mapInPandas(probe, "pid long, kernel_seen boolean, shim boolean")
+        .collect()
+    )
+    assert len(rows) == 8
+    reused = [r for r in rows if r["kernel_seen"]]
+    assert reused, rows
+    assert all(r["shim"] for r in reused), rows
+
+
 @pytest.mark.parametrize("dual", [False, True])
 def test_page_path_equals_doc_path(spark, corpus_dir, dual):
     """Skew routing invariant: the mega-doc (page-salted + window) path
